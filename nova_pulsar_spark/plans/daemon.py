@@ -25,6 +25,7 @@ import json
 import os
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,44 +95,61 @@ PLAN_SCHEMA = T.StructType(
 )
 
 
-def _read_plans(spark: SparkSession, root: str, state_glob: str, status: str):
-    """Read every project's `{state}` dir as one DataFrame with the
-    plan's queue state derived from its path (S1/P8).
+def _read_plans(spark: SparkSession, root: str, state_glob: str):
+    """Read the ``*.json`` plan files in every project's ``state_glob``
+    dirs as one FAILFAST DataFrame, or None when the glob matches no
+    dir (the AnalysisException Spark raises at load).
 
-    Only the nothing-matches-the-glob case (AnalysisException) maps to
-    None (= no plans in this state yet). Corrupt plan files raise —
+    The glob names directories, not files: Spark lists the matched dirs
+    on the driver up to `spark.sql.sources.parallelPartitionDiscovery.
+    threshold` (32) paths, while a file glob hands it one path per plan
+    file and, past 32, a listing job with a task per file.
+
+    Corrupt plan files raise when the DataFrame is first evaluated —
     FAILFAST, mirroring `plans/pulsar._read_queue`: a PERMISSIVE read
     would hand the Orbiter an all-null plan row instead of failing."""
-    path = os.path.join(root, "*", state_glob)
-    from pyspark.errors import AnalysisException
-
     try:
-        df = (
+        return (
             spark.read.schema(PLAN_SCHEMA)
             .option("pathGlobFilter", "*.json")
             .option("mode", "FAILFAST")
-            .json(path)
+            .json(os.path.join(root, "*", state_glob))
         )
-        if not df.take(1):  # stays in the DataFrame/codegen path (no RDD conversion)
-            return None
-        return df.withColumn("status", F.lit(status))
     except AnalysisException:
-        return None  # no files yet for this state (path not found)
+        return None
+
+
+# Plan state dirs the daemon scans; a plan's status is its dir's name,
+# except that queued/background means "queued".
+_STATE_DIRS = ("queued/background", "active", "completed")
 
 
 def scan_namespaces(spark: SparkSession, root: str):
-    parts = [
-        _read_plans(spark, root, "queued/background/*.json", "queued"),
-        _read_plans(spark, root, "active/*.json", "active"),
-        _read_plans(spark, root, "completed/*.json", "completed"),
-    ]
-    parts = [p for p in parts if p is not None]
-    if not parts:
+    """Every project's queued (background), active and completed plans
+    from ONE listing, with the plan's queue state derived from its path
+    (S1/P8); None when no plan file exists. `queued/interactive` and
+    in-flight ``.tmp-*`` files are not matched."""
+    plans = _read_plans(spark, root, "{" + ",".join(_STATE_DIRS) + "}")
+    if plans is None:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    state_dir = F.regexp_extract(
+        F.col("_metadata.file_path"), "/(" + "|".join(_STATE_DIRS) + ")/[^/]*$", 1
+    )
+    return plans.withColumn(
+        "status", F.when(state_dir == "queued/background", "queued").otherwise(state_dir)
+    )
+
+
+def _orbiter_inputs(plans):
+    """(plan metadata, exploded phases) — the two tables
+    `scheduler.select_plan` ranks."""
+    plan_meta = plans.select(
+        "id", "title", "project", "type", "status", "execution_mode", "created_at", "n_phases"
+    )
+    phases = plans.select(
+        F.col("id").alias("plan_id"), F.explode("phases").alias("ph")
+    ).select("plan_id", F.col("ph.phase").alias("phase"), F.col("ph.files").alias("files"))
+    return plan_meta, phases
 
 
 def dispatch_once(
@@ -181,27 +199,29 @@ def dispatch_once(
     accumulate, and a recycled OS pid can never make a long-finished
     plan look in-flight.
 
-    The scan cache is released and the cycle is logged even when the
-    scan or the handoff raises — an unreadable queue must not leak
-    cached state or leave the cycle invisible in the daemon log. A
-    scan-stage failure (e.g. a corrupt plan file surfacing at the
-    lazily-evaluated count, past `_read_plans`' take(1)) is logged as
-    ``scan_error`` with the exception string, never as a normal idle
-    cycle; FAILFAST means one corrupt plan file halts dispatch for
-    every project until it is repaired or removed — deliberate, the
-    same all-stop the reference's `set -e` would produce."""
+    Spark work per cycle: one listing of the three state dirs
+    (`scan_namespaces`), one aggregate for the queued/active counts and,
+    when the gate opens, one selection plan (`scheduler.select_plan`).
+    The cycle is logged even when the scan or the handoff raises — an
+    unreadable queue must not leave the cycle invisible in the daemon
+    log. A scan-stage failure (e.g. a corrupt plan file surfacing at
+    the counts aggregate, the first action over the FAILFAST read) is
+    logged as ``scan_error`` with the exception string, never as a
+    normal idle cycle; FAILFAST means one corrupt plan file halts
+    dispatch for every project until it is repaired or removed —
+    deliberate, the same all-stop the reference's `set -e` would
+    produce."""
     now = now or _utcnow()
     if pid_alive is None:
         pid_alive = pid_alive_probe
     decision: dict = {"at": now.isoformat(), "action": "idle"}
-    plans = None
     try:
         plans = scan_namespaces(spark, root)
         if plans is None:
             return decision
-        plans = plans.cache()
-        n_queued = plans.filter(F.col("status") == "queued").count()
-        n_active = plans.filter(F.col("status") == "active").count()
+        n_queued, n_active = plans.agg(
+            F.count_if(F.col("status") == "queued"), F.count_if(F.col("status") == "active")
+        ).first()
         decision.update({"n_queued": n_queued, "n_active": n_active})
         in_flight: set[str] = set()
         if handoff is not None and n_queued > 0:
@@ -226,16 +246,7 @@ def dispatch_once(
             decision["action"] = "wait_in_flight"
             decision["in_flight"] = sorted(in_flight)
         else:
-            # Orbiter pipeline on the scanned metadata (flatten phases)
-            plan_meta = plans.select(
-                "id", "title", "project", "type", "status", "execution_mode", "created_at", "n_phases"
-            )
-            phases = plans.select(
-                F.col("id").alias("plan_id"), F.explode("phases").alias("ph")
-            ).select(
-                "plan_id", F.col("ph.phase").alias("phase"), F.col("ph.files").alias("files")
-            )
-            best = S.select_plan(plan_meta, phases, scorer=scorer).collect()
+            best = S.select_plan(*_orbiter_inputs(plans), scorer=scorer).collect()
             if not best:
                 decision["action"] = "blocked"  # queued but all dependency-blocked
             else:
@@ -276,8 +287,6 @@ def dispatch_once(
             decision.update({"action": "scan_error", "error": str(e)})
         raise
     finally:
-        if plans is not None:
-            plans.unpersist()
         _log(root, decision)
     return decision
 
@@ -306,7 +315,7 @@ def dispatch_stream(
         .option("pathGlobFilter", "*.json")
         .json(os.path.join(root, "*", "queued", "background"))
     )
-    active = _read_plans(spark, root, "active/*.json", "active")
+    active = _read_plans(spark, root, "active")
     if active is not None:
         # the stream-static guard join: static side re-planned per batch
         guarded = stream.join(active.select("project").distinct(), "project", "left_anti")
@@ -316,14 +325,8 @@ def dispatch_stream(
     dispatched: list[tuple[str, str]] = []
 
     def handle(batch_df, batch_id: int) -> None:
-        plan_meta = batch_df.select(
-            "id", "title", "project", "type", F.lit("queued").alias("status"),
-            "execution_mode", "created_at", "n_phases",
-        )
-        phases = batch_df.select(
-            F.col("id").alias("plan_id"), F.explode("phases").alias("ph")
-        ).select("plan_id", F.col("ph.phase").alias("phase"), F.col("ph.files").alias("files"))
-        best = S.select_plan(plan_meta, phases, scorer=scorer).collect()
+        queued = batch_df.withColumn("status", F.lit("queued"))
+        best = S.select_plan(*_orbiter_inputs(queued), scorer=scorer).collect()
         if best:
             chosen = best[0]
             atomic_write_json(
@@ -354,13 +357,13 @@ def monitor_once(
     """One watcher cycle: status scan → pulse.json + incidents."""
     from nova_pulsar_spark.streaming.topics import STATUS_SCHEMA
 
-    status_glob = os.path.join(root, "*", "status", "*.json")
-    try:
-        se = spark.read.schema(STATUS_SCHEMA).json(status_glob)
-        empty = not se.take(1)
-    except Exception:
-        empty = True
-    if empty:
+    try:  # a dir glob, as in `_read_plans`
+        se = (
+            spark.read.schema(STATUS_SCHEMA)
+            .option("pathGlobFilter", "*.json")
+            .json(os.path.join(root, "*", "status"))
+        )
+    except AnalysisException:  # no status file yet
         pulse = {"updated_at": now.isoformat(), "rounds": [], "incidents": []}
         atomic_write_json(root, "pulse.json", pulse)
         return pulse
@@ -368,11 +371,12 @@ def monitor_once(
     now_col = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
     flagged = S.stalled(latest, now_col, stall_minutes)
 
-    # The nested rollup is built IN SPARK (A3, orbiter.md:198-242):
-    # per-plan phase arrays via sort_array(collect_list(struct)), plans
-    # collected into one document column with to_json — the driver
-    # fetches a single serialized row, never per-(plan, phase) rows.
-    # At 100× plan counts this stays a two-level tree aggregation.
+    # The nested rollup is built IN SPARK (A3, orbiter.md:198-242) by
+    # one two-level aggregation over `flagged`: per plan, the sorted
+    # phase array and the stalled phases' incidents
+    # (collect_list(when(stalled, ...)) skips the others); then all
+    # plans into one document column with to_json — the driver fetches
+    # a single serialized row, never per-(plan, phase) rows.
     phase_struct = F.struct(
         F.col("phase"),
         F.col("status"),
@@ -381,32 +385,28 @@ def monitor_once(
         F.date_format("updated_at", "yyyy-MM-dd'T'HH:mm:ss").alias("updated_at"),
         F.col("stalled"),
     )
-    rounds_df = flagged.groupBy("plan_id", "project").agg(
-        F.sort_array(F.collect_list(phase_struct)).alias("phases")
-    )
-    rounds_doc = rounds_df.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("plan_id"), F.col("project"), F.col("phases")))
-        ).alias("rounds")
-    )
-    incidents_doc = (
-        flagged.filter(F.col("stalled"))
-        .select(
-            F.struct(
-                F.lit("stalled_kill").alias("type"),
-                F.col("project"),
-                F.col("plan_id"),
-                F.col("phase"),
-                F.lit(now.isoformat()).alias("killed_at"),
-                F.floor(
-                    (F.unix_timestamp(now_col) - F.unix_timestamp("updated_at")) / 60
-                ).cast("int").alias("stalled_for_minutes"),
-            ).alias("inc")
-        )
-        .agg(F.sort_array(F.collect_list("inc")).alias("incidents"))
+    incident_struct = F.struct(
+        F.lit("stalled_kill").alias("type"),
+        F.col("project"),
+        F.col("plan_id"),
+        F.col("phase"),
+        F.lit(now.isoformat()).alias("killed_at"),
+        F.floor(
+            (F.unix_timestamp(now_col) - F.unix_timestamp("updated_at")) / 60
+        ).cast("int").alias("stalled_for_minutes"),
     )
     doc_row = (
-        rounds_doc.crossJoin(incidents_doc)
+        flagged.groupBy("plan_id", "project")
+        .agg(
+            F.sort_array(F.collect_list(phase_struct)).alias("phases"),
+            F.collect_list(F.when(F.col("stalled"), incident_struct)).alias("incidents"),
+        )
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col("plan_id"), F.col("project"), F.col("phases")))
+            ).alias("rounds"),
+            F.sort_array(F.flatten(F.collect_list("incidents"))).alias("incidents"),
+        )
         .select(
             F.to_json(
                 F.struct(

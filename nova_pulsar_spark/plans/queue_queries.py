@@ -242,21 +242,52 @@ def board_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "filter_dep_satisfied",
-    sql=_sql(
-        """
+# The Orbiter's three selection bodies (P1, P9, O1) over `plans` and
+# `phases` plus PLAN_FILES_CTE/EDGES_CTE; module constants so tests can
+# run them over other fixture tables.
+DEP_SATISFIED_SQL = """
         SELECT p.id AS plan_id, p.project, p.type, p.created_at
         FROM plans p
         WHERE p.status = 'queued'
           AND NOT EXISTS (
             SELECT 1 FROM edges e JOIN plans d ON e.dep_id = d.id
             WHERE e.plan_id = p.id AND d.status <> 'completed')
-        """,
-        PLANS,
-        PHASES,
-        ctes=(PLAN_FILES_CTE, EDGES_CTE),
-    ),
+        """
+_PRIORITY_EXPR = """CAST(
+            CASE p.type WHEN 'security' THEN 1 WHEN 'bug' THEN 2 WHEN 'feature' THEN 3
+                        WHEN 'refactor' THEN 4 ELSE 5 END
+            - CASE WHEN EXISTS (SELECT 1 FROM edges e WHERE e.dep_id = p.id) THEN 1 ELSE 0 END
+            - CASE WHEN p.created_at = (SELECT MIN(created_at) FROM plans WHERE status = 'queued')
+                   THEN 1 ELSE 0 END
+            - CASE WHEN EXISTS (SELECT 1 FROM plan_files f WHERE f.plan_id = p.id
+                                AND regexp_matches(f.file, 'auth|security|pay'))
+                   THEN 1 ELSE 0 END
+            + CASE WHEN p.n_phases >= 4 THEN 1 ELSE 0 END
+          AS INTEGER)"""
+PRIORITY_SQL = f"""
+        SELECT
+          p.id, p.project, p.type, p.created_at,
+          {_PRIORITY_EXPR} AS priority
+        FROM plans p WHERE p.status = 'queued'
+        """
+BEST_PLAN_SQL = f"""
+        SELECT id, project, type, created_at, priority FROM (
+          SELECT
+            p.id, p.project, p.type, p.created_at,
+            {_PRIORITY_EXPR} AS priority
+          FROM plans p
+          WHERE p.status = 'queued'
+            AND NOT EXISTS (
+              SELECT 1 FROM edges e JOIN plans d ON e.dep_id = d.id
+              WHERE e.plan_id = p.id AND d.status <> 'completed')
+        ) scored
+        ORDER BY priority, created_at, id LIMIT 1
+        """
+
+
+@register(
+    "filter_dep_satisfied",
+    sql=_sql(DEP_SATISFIED_SQL, PLANS, PHASES, ctes=(PLAN_FILES_CTE, EDGES_CTE)),
     doc="P1: dependency-satisfied filter — semi/anti join pipeline (orbiter.md:57-66,85-87)",
 )
 def filter_dep_satisfied(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,27 +472,7 @@ def project_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "project_priority",
-    sql=_sql(
-        """
-        SELECT
-          p.id, p.project, p.type, p.created_at,
-          CAST(
-            CASE p.type WHEN 'security' THEN 1 WHEN 'bug' THEN 2 WHEN 'feature' THEN 3
-                        WHEN 'refactor' THEN 4 ELSE 5 END
-            - CASE WHEN EXISTS (SELECT 1 FROM edges e WHERE e.dep_id = p.id) THEN 1 ELSE 0 END
-            - CASE WHEN p.created_at = (SELECT MIN(created_at) FROM plans WHERE status = 'queued')
-                   THEN 1 ELSE 0 END
-            - CASE WHEN EXISTS (SELECT 1 FROM plan_files f WHERE f.plan_id = p.id
-                                AND regexp_matches(f.file, 'auth|security|pay'))
-                   THEN 1 ELSE 0 END
-            + CASE WHEN p.n_phases >= 4 THEN 1 ELSE 0 END
-          AS INTEGER) AS priority
-        FROM plans p WHERE p.status = 'queued'
-        """,
-        PLANS,
-        PHASES,
-        ctes=(PLAN_FILES_CTE, EDGES_CTE),
-    ),
+    sql=_sql(PRIORITY_SQL, PLANS, PHASES, ctes=(PLAN_FILES_CTE, EDGES_CTE)),
     doc="P9: priority scoring — type base + unblocks/waited/large adjustments (orbiter.md:68-83)",
 )
 def project_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -992,34 +1003,7 @@ def agg_eta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "topk_best_plan",
-    sql=_sql(
-        """
-        SELECT id, project, type, created_at, priority FROM (
-          SELECT
-            p.id, p.project, p.type, p.created_at,
-            CAST(
-              CASE p.type WHEN 'security' THEN 1 WHEN 'bug' THEN 2 WHEN 'feature' THEN 3
-                          WHEN 'refactor' THEN 4 ELSE 5 END
-              - CASE WHEN EXISTS (SELECT 1 FROM edges e WHERE e.dep_id = p.id) THEN 1 ELSE 0 END
-              - CASE WHEN p.created_at = (SELECT MIN(created_at) FROM plans WHERE status = 'queued')
-                     THEN 1 ELSE 0 END
-              - CASE WHEN EXISTS (SELECT 1 FROM plan_files f WHERE f.plan_id = p.id
-                                  AND regexp_matches(f.file, 'auth|security|pay'))
-                     THEN 1 ELSE 0 END
-              + CASE WHEN p.n_phases >= 4 THEN 1 ELSE 0 END
-            AS INTEGER) AS priority
-          FROM plans p
-          WHERE p.status = 'queued'
-            AND NOT EXISTS (
-              SELECT 1 FROM edges e JOIN plans d ON e.dep_id = d.id
-              WHERE e.plan_id = p.id AND d.status <> 'completed')
-        ) scored
-        ORDER BY priority, created_at, id LIMIT 1
-        """,
-        PLANS,
-        PHASES,
-        ctes=(PLAN_FILES_CTE, EDGES_CTE),
-    ),
+    sql=_sql(BEST_PLAN_SQL, PLANS, PHASES, ctes=(PLAN_FILES_CTE, EDGES_CTE)),
     doc="O1: full Orbiter pipeline — eligible → scored → top-1 (orbiter.md:85-89)",
 )
 def topk_best_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

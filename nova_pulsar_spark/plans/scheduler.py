@@ -9,10 +9,16 @@ DataFrame transforms over any conforming plans/phases/status tables
 (fixture-fed in tests, file/stream-fed in production).
 
 Scale notes: plan/phase metadata is small relative to the data a plan
-processes, but the same transforms hold if the queue itself is huge —
-dependency detection is an equi-join on exploded file keys (shuffle
-on file, skew-salted if one path is hot), never an O(n²) cross join;
-priority selection is an aggregate, not a global sort.
+processes, but the same transforms hold if the queue itself is huge.
+Selection (`dep_satisfied`, `priority_scores`, `best_plan`) takes one
+pass over the exploded (plan, file) rows: a per-id aggregate broadcast
+onto them, one window over ``file`` (shuffle on file) that keeps each
+file's best and runner-up creation times, and one ``groupBy(plan_id)``
+back to per-plan flags — no edge table, no self-join, never an O(n²)
+cross join. `dep_edges` (the explicit edge list, an equi-join on the
+file key) is kept for the edge and closure queries. The top-1 is a
+``limit`` over an ordering, which Spark runs as a per-partition top-k,
+not a global sort.
 """
 
 from __future__ import annotations
@@ -63,28 +69,74 @@ def dep_edges(plans: DataFrame, phases: DataFrame) -> DataFrame:
     )
 
 
-def dep_satisfied(plans: DataFrame, phases: DataFrame) -> DataFrame:
-    """Queued plans whose every dependency is completed (P1).
+def plan_flags(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Per-id dependency flags, from ONE pass over the exploded
+    (plan, file) rows — the shared input of `dep_satisfied`,
+    `priority_scores` and `best_plan`. One row per plan id that has
+    files:
 
-    eligible = queued ANTI-JOIN (edges whose dep is not completed).
+    - ``blocked``: some edge ``dep_id → id`` has a dep with a row that
+      is not completed (P1);
+    - ``unblocks``: some edge ``id → plan_id`` exists (P9);
+    - ``critical``: the plan touches a critical file (P9).
+
+    Same edges as `dep_edges`, without materializing them: over ids, an
+    edge A → B on a shared file exists iff min(created_at of A's rows) <
+    max(created_at of B's rows). So per file it is enough to know the
+    earliest creation among not-completed ids and the latest creation
+    among all ids — each as best and runner-up over DISTINCT ids, so a
+    row never pairs with its own id (`a.plan_id <> b.plan_id`) even when
+    that id sits in several plans rows. One window over ``file``, one
+    ``groupBy(plan_id)``; NULL ``created_at``/``file`` never match, as
+    in the SQL twin.
     """
-    edges = dep_edges(plans, phases)
-    blocking = edges.join(
-        plans.filter(F.col("status") != "completed").select(F.col("id").alias("dep_id")),
-        "dep_id",
-    ).select("plan_id").distinct()
-    return plans.filter(F.col("status") == "queued").join(
-        blocking, plans.id == blocking.plan_id, "left_anti"
+    ids = plans.groupBy(F.col("id").alias("plan_id")).agg(
+        F.min("created_at").alias("first_created"),
+        F.max("created_at").alias("last_created"),
+        F.max(F.col("status") != "completed").alias("live"),
+    )
+    rows = (
+        phases.select("plan_id", F.explode("files").alias("file"))
+        .filter(F.col("file").isNotNull())
+        .join(ids, "plan_id")
+    )
+    w = W.partitionBy("file")
+    dep_c = F.when(F.col("live"), F.col("first_created"))
+
+    def top(value, agg):
+        # (value, plan_id) of the per-file extreme over rows with a value
+        return agg(F.when(value.isNotNull(), F.struct(value.alias("v"), F.col("plan_id").alias("id")))).over(w)
+
+    def runner_up(value, agg, best):
+        return agg(F.when(F.col("plan_id") != F.col(f"{best}.id"), value)).over(w)
+
+    last_c = F.col("last_created")
+    rows = (
+        rows.withColumn("dep1", top(dep_c, F.min))
+        .withColumn("last1", top(last_c, F.max))
+        .withColumn("dep2", runner_up(dep_c, F.min, "dep1"))
+        .withColumn("last2", runner_up(last_c, F.max, "last1"))
+    )
+    # earliest not-completed / latest creation among the OTHER ids on this file
+    other_dep = F.when(F.col("plan_id") == F.col("dep1.id"), F.col("dep2")).otherwise(F.col("dep1.v"))
+    other_last = F.when(F.col("plan_id") == F.col("last1.id"), F.col("last2")).otherwise(F.col("last1.v"))
+    return rows.groupBy(F.col("plan_id").alias("id")).agg(
+        F.bool_or(other_dep < last_c).alias("blocked"),
+        F.bool_or(F.col("first_created") < other_last).alias("unblocks"),
+        F.bool_or(F.col("file").rlike(CRITICAL_FILE_RE)).alias("critical"),
     )
 
 
-def priority_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
-    """Priority projection (P9, `agents/orbiter.md:68-83`).
+def _flag(name: str):
+    return F.coalesce(F.col(name), F.lit(False))
 
-    base(type) − 1 if the plan unblocks others − 1 if it waited
-    longest among queued − 1 if it touches critical files
-    (auth/security/payments, orbiter.md:82) + 1 if large (≥4 phases).
-    """
+
+def _scored(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Queued plans with their priority (P9, `agents/orbiter.md:68-83`)
+    and ``blocked`` flag: base(type) − 1 if the plan unblocks others −
+    1 if it waited longest among queued − 1 if it touches critical
+    files (auth/security/payments, orbiter.md:82) + 1 if large (≥4
+    phases)."""
     base = F.coalesce(
         F.element_at(
             F.create_map(*[F.lit(x) for kv in TYPE_PRIORITY.items() for x in kv]),
@@ -92,20 +144,10 @@ def priority_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
         ),
         F.lit(5),
     )
-    edges = dep_edges(plans, phases)
-    unblocks = edges.select(F.col("dep_id").alias("id")).distinct().withColumn("unblocks", F.lit(1))
-    critical = (
-        plan_files(phases)
-        .filter(F.col("file").rlike(CRITICAL_FILE_RE))
-        .select(F.col("plan_id").alias("id"))
-        .distinct()
-        .withColumn("critical", F.lit(1))
-    )
     queued = plans.filter(F.col("status") == "queued")
     waited = queued.select(F.min("created_at").alias("oldest_created"))
     return (
-        queued.join(unblocks, "id", "left")
-        .join(critical, "id", "left")
+        queued.join(plan_flags(plans, phases), "id", "left")
         .crossJoin(waited)
         .select(
             "id",
@@ -114,21 +156,43 @@ def priority_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
             "created_at",
             (
                 base
-                - F.coalesce(F.col("unblocks"), F.lit(0))
+                - _flag("unblocks").cast("int")
                 - F.when(F.col("created_at") == F.col("oldest_created"), 1).otherwise(0)
-                - F.coalesce(F.col("critical"), F.lit(0))
+                - _flag("critical").cast("int")
                 + F.when(F.col("n_phases") >= 4, 1).otherwise(0)
             ).cast("int").alias("priority"),
+            _flag("blocked").alias("blocked"),
         )
     )
+
+
+def dep_satisfied(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Queued plans whose every dependency is completed (P1)."""
+    blocked = plan_flags(plans, phases).filter(F.col("blocked")).select("id")
+    return plans.filter(F.col("status") == "queued").join(blocked, "id", "left_anti")
+
+
+def priority_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Priority projection (P9) of every queued plan; see `_scored`."""
+    return _scored(plans, phases).drop("blocked")
+
+
+# O1 order: lowest priority, then oldest, then id — NULLs last, as in
+# the DuckDB twin's ORDER BY (Spark's ascending default puts them first).
+def _top(scored: DataFrame, n: int) -> DataFrame:
+    return scored.orderBy(
+        *(F.col(c).asc_nulls_last() for c in ("priority", "created_at", "id"))
+    ).limit(n)
+
+
+def _eligible_scored(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    return _scored(plans, phases).filter(~F.col("blocked")).drop("blocked")
 
 
 def best_plan(plans: DataFrame, phases: DataFrame) -> DataFrame:
     """Top-1 dispatch choice (O1, `agents/orbiter.md:85-89`): among
     dependency-satisfied queued plans, lowest priority then oldest."""
-    eligible = dep_satisfied(plans, phases).select("id")
-    scored = priority_scores(plans, phases).join(eligible, "id")
-    return scored.orderBy("priority", "created_at", "id").limit(1)
+    return _top(_eligible_scored(plans, phases), 1)
 
 
 # --- S11/L1: the external-LLM scorer seam --------------------------------
@@ -176,25 +240,25 @@ def select_plan(plans: DataFrame, phases: DataFrame, scorer=None) -> DataFrame:
     """
     if scorer is None:
         return best_plan(plans, phases)
-    eligible = dep_satisfied(plans, phases).select("id")
-    scored = priority_scores(plans, phases).join(eligible, "id")
-    finalists = scored.orderBy("priority", "created_at", "id").limit(SCORER_CANDIDATES)
+    scored = _eligible_scored(plans, phases)
+    best = _top(scored, 1)
+    finalists = _top(scored, SCORER_CANDIDATES)
     candidates = [
         {k: (v.isoformat() if hasattr(v, "isoformat") else v) for k, v in r.asDict().items()}
         for r in finalists.collect()
     ]
     if not candidates:
-        return best_plan(plans, phases)
+        return best
     try:
         reply = scorer(candidates)
     except Exception:
-        return best_plan(plans, phases)  # scorer crash → deterministic
+        return best  # scorer crash → deterministic
     m = DISPATCH_RE.match((reply or "").strip())
     if m is None:
-        return best_plan(plans, phases)  # malformed reply → deterministic
+        return best  # malformed reply → deterministic
     project, plan_id = m.group(1), m.group(2)
     if not any(c["project"] == project and c["id"] == plan_id for c in candidates):
-        return best_plan(plans, phases)  # nonexistent plan → deterministic
+        return best  # nonexistent plan → deterministic
     return scored.filter((F.col("project") == project) & (F.col("id") == plan_id)).limit(1)
 
 

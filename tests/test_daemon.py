@@ -70,9 +70,22 @@ def test_dispatch_gate_blocks_second_cycle(spark, tmp_path):
 
 
 def test_dispatch_idle_when_empty(spark, tmp_path):
+    """Empty state dirs, interactive-only plans and a root without
+    projects all log idle, never scan_error."""
+    from nova_pulsar_spark.plans.daemon import scan_namespaces
+
     root = str(tmp_path / "comms3")
     QueueNamespace(root=root, project="alpha").setup()
-    assert dispatch_once(spark, root, NOW)["action"] in ("idle",)
+    only_interactive = str(tmp_path / "comms3_ia")
+    ns = QueueNamespace(root=only_interactive, project="alpha")
+    ns.setup()
+    ns.enqueue_plan(_plan("plan-ia", "alpha", "bug", "2026-02-20T09:00:00", [["a.py"]]), interactive=True)
+    no_projects = str(tmp_path / "comms3_none")
+    for r in (root, only_interactive, no_projects):
+        assert dispatch_once(spark, r, NOW)["action"] == "idle", r
+        last = open(os.path.join(r, "daemon.log")).read().strip().splitlines()[-1]
+        assert json.loads(last.split(" - ", 1)[1])["action"] == "idle"
+    assert scan_namespaces(spark, no_projects) is None
 
 
 def test_watcher_auto_exit(spark, tmp_path):
@@ -316,14 +329,82 @@ def test_corrupt_scan_logs_scan_error_not_idle(spark, tmp_path):
     normal idle cycle."""
     import pytest
 
-    root = str(tmp_path / "comms_corrupt")
-    _setup_queues(root)
-    bad = os.path.join(root, "alpha", "queued", "background", "zz-corrupt.json")
-    with open(bad, "w") as f:
-        f.write('{"id": "broken", ')  # truncated JSON
-    with pytest.raises(Exception):
-        dispatch_once(spark, root, NOW)
-    last = open(os.path.join(root, "daemon.log")).read().strip().splitlines()[-1]
-    rec = json.loads(last.split(" - ", 1)[1])
-    assert rec["action"] == "scan_error"
-    assert rec["error"]
+    # every scanned state dir is read FAILFAST, not only the queue
+    for sub in ("queued/background", "active", "completed"):
+        root = str(tmp_path / "comms_corrupt" / sub.replace("/", "_"))
+        _setup_queues(root)
+        bad = os.path.join(root, "alpha", sub, "zz-corrupt.json")
+        with open(bad, "w") as f:
+            f.write('{"id": "broken", ')  # truncated JSON
+        with pytest.raises(Exception):
+            dispatch_once(spark, root, NOW)
+        last = open(os.path.join(root, "daemon.log")).read().strip().splitlines()[-1]
+        rec = json.loads(last.split(" - ", 1)[1])
+        assert rec["action"] == "scan_error"
+        assert rec["error"]
+
+
+# --- the one-listing scan and the cycle's Spark job budget ---------------
+
+
+def test_scan_reads_three_state_dirs_in_one_listing(spark, tmp_path):
+    """Each plan's status comes from its state dir; interactive plans and
+    atomic-write temp files are not scanned."""
+    from nova_pulsar_spark.plans.daemon import scan_namespaces
+
+    root = str(tmp_path / "comms_scan")
+    alpha, beta = _setup_queues(root)
+    beta.move_plan("plan-20260226-0900", "queued_background", "active")
+    beta.enqueue_plan(_plan("plan-done", "beta", "docs", "2026-02-20T09:00:00", [["d.md"]]))
+    beta.move_plan("plan-done", "queued_background", "completed")
+    alpha.enqueue_plan(_plan("plan-ia", "alpha", "bug", "2026-02-20T09:00:00", [["a.py"]]), interactive=True)
+    # temp files of writes caught before their rename (partial JSON)
+    for name in (".tmp-x7k2-0a1b2c3d", ".tmp-partial.json"):
+        with open(os.path.join(alpha.dir_for("queued_background"), name), "w") as f:
+            f.write('{"id": "half-written", ')
+    got = {(r.id, r.project, r.status) for r in scan_namespaces(spark, root).collect()}
+    assert got == {
+        ("plan-20260228-1000", "alpha", "queued"),
+        ("plan-20260226-0900", "beta", "active"),
+        ("plan-done", "beta", "completed"),
+    }
+
+
+def _jobs_in(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cycle_stays_within_job_budget(spark, tmp_path):
+    """One listing, one counts aggregate and one selection plan per
+    dispatch cycle (≤ 12 Spark jobs); one status rollup per watcher
+    cycle (≤ 6)."""
+    root = str(tmp_path / "comms_budget")
+    projects = [QueueNamespace(root=root, project=p) for p in ("alpha", "beta", "gamma")]
+    for i, ns in enumerate(projects):
+        ns.setup()
+        for k in range(3):
+            files = [[f"src/{ns.project}/m{k}.py", "src/shared/auth.py" if k == 0 else f"t{k}.py"]]
+            ns.enqueue_plan(_plan(f"plan-{ns.project}-{k}", ns.project, ("bug", "feature", "chore")[k],
+                                  f"2026-02-2{i + 1}T0{k}:00:00", files))
+        ns.enqueue_plan(_plan(f"plan-{ns.project}-old", ns.project, "docs", "2026-02-01T09:00:00", [["README.md"]]))
+        ns.move_plan(f"plan-{ns.project}-old", "queued_background", "completed")
+    d, jobs = _jobs_in(spark, f"budget-dispatch-{tmp_path.name}", lambda: dispatch_once(spark, root, NOW))
+    assert d["action"] == "dispatch"
+    assert jobs <= 12, f"dispatch_once ran {jobs} Spark jobs"
+    ns = next(p for p in projects if p.project == d["project"])
+    atomic_write_json(ns.dir_for("status"), "s1.json", {
+        "task_id": "phase-1", "project": d["project"], "plan_id": d["plan_id"], "phase": 1,
+        "thread_id": "th", "status": "running", "tool_count": 3, "last_tool": "Edit",
+        "last_file": "x.py", "updated_at": "2026-03-01T11:30:00", "started_at": "2026-03-01T11:00:00",
+        "completed_at": None,
+    })
+    pulse, jobs = _jobs_in(spark, f"budget-monitor-{tmp_path.name}", lambda: monitor_once(spark, root, NOW))
+    assert pulse["incidents"] and pulse["rounds"]
+    assert jobs <= 6, f"monitor_once ran {jobs} Spark jobs"

@@ -4,10 +4,14 @@ FIXTURES.md §B scenarios) — beyond oracle equality, these pin the
 
 from __future__ import annotations
 
+import random
+from datetime import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
 from nova_pulsar_spark.plans import scheduler as S
-from nova_pulsar_spark.plans.fixtures import NOW, PHASES, PLANS, STATUS_EVENTS
+from nova_pulsar_spark.plans.fixtures import NOW, PHASES, PLANS, STATUS_EVENTS, Fixture
 
 
 def test_dep_satisfied_blocks_on_active_and_failed_deps(spark):
@@ -159,3 +163,76 @@ def test_dispatch_corrupt_plan_file_raises(spark, tmp_path):
         f.write("not json at all")
     with pytest.raises(Exception, match="(?i)malformed|failfast|parse"):
         dispatch_once(spark, root)
+
+
+# --- randomized oracle: the one-pass selection against its SQL twins -----
+
+_STAMPS = [datetime(2026, 2, 24, 9), datetime(2026, 2, 25, 9), datetime(2026, 2, 26, 10),
+           datetime(2026, 2, 27, 8), None, None]
+_FILES = ["src/auth/api.py", "src/pay/gateway.py", "src/io/writer.py", "README.md",
+          "etl/load.py", "docs/security.md"]
+_TYPES = ["security", "bug", "feature", "refactor", "chore", "docs", None, "spike"]
+
+
+def _random_queue(seed: int, with_queued: bool = True) -> tuple[Fixture, Fixture]:
+    """Seeded plans/phases tables: few timestamps (ties) plus NULL, a small
+    shared file pool (overlaps), plans with no phase rows, phases with no
+    or NULL files, phases of an id missing from plans, and three ids in
+    two rows each (another project). The two rows of an id never tie on
+    created_at, so the O1 order stays total and top-1 is deterministic."""
+    rng = random.Random(seed)
+    statuses = ["queued"] * 4 + ["active", "completed", "completed", "failed"]
+    if not with_queued:
+        statuses = [s for s in statuses if s != "queued"]
+    plans = [
+        (f"plan-{i}", rng.choice(["alpha", "beta"]), rng.choice(_TYPES), rng.choice(statuses),
+         rng.choice(_STAMPS), rng.choice([None, 1, 2, 4, 5]))
+        for i in range(rng.randint(8, 14))
+    ]
+    for twin in rng.sample(plans, 3):
+        plans.append((twin[0], "gamma", rng.choice(_TYPES), rng.choice(statuses),
+                      rng.choice([s for s in _STAMPS if s != twin[4]]), twin[5]))
+    phases = []
+    for pid in sorted({p[0] for p in plans} | {"plan-orphan"}):
+        for ph in range(rng.choice([0, 1, 1, 2, 3])):
+            files = None if rng.random() < 0.1 else rng.sample(_FILES, rng.choice([0, 1, 1, 2]))
+            phases.append((pid, ph + 1, files))
+    return (
+        Fixture("plans", (("id", "string"), ("project", "string"), ("type", "string"),
+                          ("status", "string"), ("created_at", "timestamp"), ("n_phases", "int")),
+                tuple(plans)),
+        Fixture("phases", (("plan_id", "string"), ("phase", "int"), ("files", "array<string>")),
+                tuple(phases)),
+    )
+
+
+def _sorted_rows(rows) -> list[tuple]:
+    return sorted((tuple(r) for r in rows), key=lambda r: [(v is None, v if v is not None else 0) for v in r])
+
+
+@pytest.mark.parametrize("seed,with_queued", [(s, True) for s in range(12)] + [(100, False)])
+def test_selection_matches_sql_twins_on_random_queues(spark, seed, with_queued):
+    """`dep_satisfied`, `priority_scores` and `best_plan` equal the DuckDB
+    bodies of filter_dep_satisfied, project_priority and topk_best_plan
+    over the same random tables."""
+    import duckdb
+
+    from nova_pulsar_spark.plans import queue_queries as Q
+
+    plans, phases = _random_queue(seed, with_queued)
+    p, ph = plans.spark_df(spark), phases.spark_df(spark)
+    con = duckdb.connect()
+
+    def oracle(body: str) -> list[tuple]:
+        return _sorted_rows(con.execute(Q._sql(body, plans, phases, ctes=(Q.PLAN_FILES_CTE, Q.EDGES_CTE))).fetchall())
+
+    got = {
+        "dep_satisfied": S.dep_satisfied(p, ph).select(F.col("id").alias("plan_id"), "project", "type", "created_at"),
+        "priority": S.priority_scores(p, ph).select("id", "project", "type", "created_at", "priority"),
+        "best": S.best_plan(p, ph).select("id", "project", "type", "created_at", "priority"),
+    }
+    want = {"dep_satisfied": Q.DEP_SATISFIED_SQL, "priority": Q.PRIORITY_SQL, "best": Q.BEST_PLAN_SQL}
+    for name, df in got.items():
+        assert _sorted_rows(df.collect()) == oracle(want[name]), name
+    if not with_queued:
+        assert not oracle(Q.PRIORITY_SQL)
