@@ -100,10 +100,13 @@ def _read_plans(spark: SparkSession, root: str, state_glob: str):
     dirs as one FAILFAST DataFrame, or None when the glob matches no
     dir (the AnalysisException Spark raises at load).
 
-    The glob names directories, not files: Spark lists the matched dirs
-    on the driver up to `spark.sql.sources.parallelPartitionDiscovery.
-    threshold` (32) paths, while a file glob hands it one path per plan
-    file and, past 32, a listing job with a task per file.
+    The glob names directories, not files, so Spark gets one path per
+    matched dir instead of one per plan file. It lists those paths
+    in-process, with no Spark job, only while there are at most
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) of
+    them: for `scan_namespaces`, projects × 3 state dirs ≤ 32, i.e. up
+    to 10 projects. Past that the listing becomes one Spark job with a
+    task per dir.
 
     Corrupt plan files raise when the DataFrame is first evaluated —
     FAILFAST, mirroring `plans/pulsar._read_queue`: a PERMISSIVE read
@@ -200,7 +203,8 @@ def dispatch_once(
     plan look in-flight.
 
     Spark work per cycle: one listing of the three state dirs
-    (`scan_namespaces`), one aggregate for the queued/active counts and,
+    (`scan_namespaces`; no listing job up to 10 projects, see
+    `_read_plans`), one aggregate for the queued/active counts and,
     when the gate opens, one selection plan (`scheduler.select_plan`).
     The cycle is logged even when the scan or the handoff raises — an
     unreadable queue must not leave the cycle invisible in the daemon
@@ -357,7 +361,7 @@ def monitor_once(
     """One watcher cycle: status scan → pulse.json + incidents."""
     from nova_pulsar_spark.streaming.topics import STATUS_SCHEMA
 
-    try:  # a dir glob, as in `_read_plans`
+    try:  # a dir glob, as in `_read_plans`: no listing job up to 32 projects
         se = (
             spark.read.schema(STATUS_SCHEMA)
             .option("pathGlobFilter", "*.json")

@@ -384,7 +384,8 @@ def _jobs_in(spark, group: str, fn):
 def test_cycle_stays_within_job_budget(spark, tmp_path):
     """One listing, one counts aggregate and one selection plan per
     dispatch cycle (≤ 12 Spark jobs); one status rollup per watcher
-    cycle (≤ 6)."""
+    cycle (≤ 6). The budget holds up to 10 projects, while Spark lists
+    the projects × 3 state dirs without a job (`daemon._read_plans`)."""
     root = str(tmp_path / "comms_budget")
     projects = [QueueNamespace(root=root, project=p) for p in ("alpha", "beta", "gamma")]
     for i, ns in enumerate(projects):

@@ -1,17 +1,17 @@
-"""Jobs, CPU and executed plans of the daemon cycle on the benchmark's
-plan queue (`perfbench.gen.write_queue`: 4 projects, 4 queued and 40
+"""Executed plans of the daemon cycle on the benchmark's plan queue
+(`perfbench.gen.write_queue`, seed 1: 4 projects, 4 queued and 40
 completed plans).
 
-    python tools/cycle_plans.py                          # print jobs / CPU / wall
     python tools/cycle_plans.py --out plans/<dir> --tag after
 
-Runs cycles like the ``queue_drain`` workload: ``dispatch_once``, the
-dispatched plan's status records, ``finalize_plan``, ``monitor_once``.
-The first ``--cycles - 1`` cycles warm the JVM; the last is reported.
-With ``--out`` it writes the last cycle's formatted executed plans:
-``select_plan_<tag>.txt`` (the plan `scheduler.select_plan` returned
-inside ``dispatch_once``) and ``monitor_once_<tag>.txt`` (every action
-``monitor_once`` ran). Work-dir paths in the plans read ``<work>``.
+Runs three cycles like the ``queue_drain`` workload: ``dispatch_once``,
+the dispatched plan's status records, ``finalize_plan``,
+``monitor_once``. The first two warm the JVM. The third cycle's
+formatted executed plans go to ``select_plan_<tag>.txt`` (the plan
+`scheduler.select_plan` returned inside ``dispatch_once``) and
+``monitor_once_<tag>.txt`` (every action ``monitor_once`` ran).
+Work-dir paths in the plans read ``<work>``. Jobs per cycle come from
+the traced benchmark run (``plans.jobs_per_cycle``).
 """
 
 from __future__ import annotations
@@ -22,31 +22,30 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+SEED = 1
+CYCLES = 3  # the queue holds 4 queued plans, one dispatched per cycle
+
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--out", default=None, help="directory for the plan files")
+    ap.add_argument("--out", required=True, help="directory for the plan files")
     ap.add_argument("--tag", default="after")
-    ap.add_argument("--cycles", type=int, default=3, help="cycles run; at most 4 plans are queued")
     args = ap.parse_args()
 
     from nova_pulsar_spark.plans import daemon, pulsar, scheduler
     from nova_pulsar_spark.session import get_spark
     from nova_pulsar_spark.streaming import topics
     from perfbench import gen
-    from perfbench.procs import tree_cpu_s
 
     spark = get_spark("cycle-plans")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="cycle-plans-")
     root = os.path.join(work, "comms")
-    by_id = {p["id"]: p for p in gen.write_queue(root, args.seed, 4, 4, 40)}
+    by_id = {p["id"]: p for p in gen.write_queue(root, SEED, 4, 4, 40)}
 
     # executed plans, recorded after each collect (take/first/head end there)
     DataFrame = type(spark.range(1))  # the session's concrete DataFrame class
@@ -75,39 +74,31 @@ def main() -> None:
 
     DataFrame.collect, scheduler.select_plan = collect, select_plan
 
-    def timed(name: str, cycle: int, fn):
-        last = cycle == args.cycles - 1
-        current[0] = name if last else None
-        group = f"{name}-{cycle}"
-        spark.sparkContext.setJobGroup(group, group)
-        cpu0, t0 = tree_cpu_s(), time.perf_counter()
-        out = fn()
-        wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
-        jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-        current[0] = None
-        if last:
-            print(f"{name}: {jobs} jobs, {cpu:.2f} CPU-s, {wall:.2f} s wall")
-        return out
+    def recorded(name: str, cycle: int, fn):
+        current[0] = name if cycle == CYCLES - 1 else None
+        try:
+            return fn()
+        finally:
+            current[0] = None
 
     now = gen.QUEUE_EPOCH + dt.timedelta(days=30)
-    for cycle in range(args.cycles):
-        d = timed("dispatch_once", cycle, lambda: daemon.dispatch_once(spark, root, now))
+    for cycle in range(CYCLES):
+        d = recorded("dispatch_once", cycle, lambda: daemon.dispatch_once(spark, root, now))
         assert d["action"] == "dispatch", d
         plan = by_id[d["plan_id"]]
         topic = topics.Topic(base_dir=os.path.join(root, plan["project"], "status"), schema=topics.STATUS_SCHEMA)
         for i, ev in enumerate(gen.plan_status_events(plan, now)):
             topic.produce(f"{plan['id']}-{i:02d}.json", ev)
         pulsar.finalize_plan(root, plan["project"], plan["id"], now)
-        timed("monitor_once", cycle, lambda: daemon.monitor_once(spark, root, now + dt.timedelta(minutes=14)))
+        recorded("monitor_once", cycle, lambda: daemon.monitor_once(spark, root, now + dt.timedelta(minutes=14)))
         now += dt.timedelta(minutes=15)
 
-    if args.out:
-        os.makedirs(args.out, exist_ok=True)
-        for name in ("select_plan", "monitor_once"):
-            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
-            with open(path, "w") as f:
-                f.write("\n\n".join(plans.get(name, [])))
-            print("wrote", path)
+    os.makedirs(args.out, exist_ok=True)
+    for name in ("select_plan", "monitor_once"):
+        path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+        with open(path, "w") as f:
+            f.write("\n\n".join(plans.get(name, [])))
+        print("wrote", path)
     spark.stop()
     shutil.rmtree(work)
 
