@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nova_pulsar_spark.registry import all_queries
-from nova_pulsar_spark.session import get_spark
+from nova_pulsar_spark.session import default_parallelism, get_spark
 
 RUNS = 3  # best-of-3: local-mode timings jitter up to 2x under load
 # Single source of truth for the driver's default SF (ADVICE r6): the
@@ -192,9 +192,10 @@ def _provenance_start() -> dict:
     noisy-host run is self-describing instead of silently poisoning
     the round-over-round comparison (VERDICT r7: the committed 77.3 s
     artifact vs the doc's 66.3 s quiet-host run were indistinguishable
-    after the fact). Records the timing policy, host width, 1-minute
+    after the fact). Records the timing policy, the configured Spark
+    width (``cpus``) beside the host's (``host_cpus``), the 1-minute
     load average at start, and a sibling-process count (other live
-    python/java processes that could steal the 32 cores)."""
+    python/java processes that could steal the host's cores)."""
     try:
         load1, load5, _ = os.getloadavg()
     except OSError:  # pragma: no cover - getloadavg always works on linux
@@ -203,7 +204,8 @@ def _provenance_start() -> dict:
         "policy": f"warm-up run discarded, then best-of-{RUNS} per query; "
         "value = sum of per-query bests",
         "runs": RUNS,
-        "cpus": os.cpu_count(),
+        "cpus": default_parallelism(),
+        "host_cpus": os.cpu_count(),
         "loadavg_1m_start": round(load1, 2),
         "loadavg_5m_start": round(load5, 2),
         "sibling_procs_start": _sibling_procs(),

@@ -1,24 +1,31 @@
-"""Persisted ANN index artifacts: build once, probe many.
+"""The stage store: persisted index artifacts and the session memo.
 
-The IVF coarse quantizer, the PQ codebook, and the sign-LSH band table
-are INDEX artifacts, not per-query intermediates: at 100 TB they are
-built by a scheduled index job, stored next to the corpus, and read by
-every probe query until `llm_simsearch_ivf_stats` flags drift (cell
-imbalance / centroid staleness), at which point the index job re-runs.
-Through round 3 they lived in a session-local cache — correct plans,
-but the lifecycle was invisible. This module makes it real:
+The IVF coarse quantizer, the PQ codebook, the sign-LSH band table and
+the shared dedup/graph/rank stages are INDEX artifacts, not per-query
+intermediates: at 100 TB they are built by a scheduled index job,
+stored next to the corpus, and read by every probe query until
+`llm_simsearch_ivf_stats` flags drift (cell imbalance / centroid
+staleness), at which point the index job re-runs. Two tiers:
 
 - ``load_or_build(spark, sf_dir, kind, build)`` round-trips an index
   frame through ``spark-warehouse/ann_index/<kind>/<corpus>-<fp>/``
   (or ``$SPARK_GRAFT_INDEX_DIR``): hit → one parquet read, miss →
   build, persist, read back.
-- Staleness is structural, not advisory: the directory key embeds a
-  CORPUS FINGERPRINT (sorted (name, length, mtime) of every file under
-  the source table, hashed). A regenerated or appended corpus changes
-  the fingerprint, so probes stop matching the old index and the next
-  probe triggers a rebuild — the stale index can never be silently
-  read. Old-fingerprint directories are dead data; a janitor can
-  delete them any time.
+- ``memo(spark, sf_dir, kind, make)`` keeps one value per (session,
+  store, corpus, kind, fingerprint) in ``_MEMO``: hit → the stored
+  value, no Spark job; miss → ``make()``, which typically reads
+  ``load_or_build`` frames and materializes them the way its stage
+  needs (a ``localCheckpoint``, a ``.cache()``, a collect, a count).
+  Inserting a new fingerprint drops and unpersists the entry of the
+  older one, so an in-session corpus rewrite neither serves stale
+  frames nor keeps their blocks pinned.
+- Staleness is structural, not advisory: both keys embed a CORPUS
+  FINGERPRINT (sorted (name, length, mtime) of every file under the
+  kind's source table, ``KIND_TABLES``, hashed). A regenerated or
+  appended corpus changes the fingerprint, so probes stop matching the
+  old index and the next probe triggers a rebuild — the stale index
+  can never be silently read. Old-fingerprint directories are dead
+  data; the janitor (``gc_stale``) can delete them any time.
 - All I/O goes through Spark writers + the Hadoop FileSystem API
   (sources/layout.py helpers), so the index store works on any scheme
   the cluster can reach (hdfs://, s3a://, file://).
@@ -30,8 +37,7 @@ invisible. Concurrent builders of the same fingerprint write the same
 deterministic content; last-writer-wins on the meta is benign.
 
 Reference parity: the reference has no ANN layer; this is part of the
-LLM-data-pipeline brief (similarity search at scale). Consumed by
-`ivf_centroids`, `pq_codebook` and `_sign_bands` in similarity.py.
+LLM-data-pipeline brief (similarity search and dedup at scale).
 """
 
 from __future__ import annotations
@@ -111,6 +117,24 @@ def corpus_fingerprint(spark: SparkSession, sf_dir: str, table: str = "embedding
     return hashlib.md5(json.dumps(entries).encode()).hexdigest()[:16]
 
 
+# Which source table each kind fingerprints against, for the store,
+# the memo and the janitor alike. Kinds not listed default to the
+# embeddings table (the ANN artifacts). The dedup stages key on the
+# documents fingerprint and the co-purchase graph on lineitem's, so a
+# single "keep" fingerprint would mark every other table's LIVE index
+# stale.
+KIND_TABLES = {
+    "dedup_mh": "documents",
+    "dedup_cand": "documents",
+    "dedup_ws": "documents",
+    "dedup_candidates": "documents",
+    "dedup_clusters": "documents",
+    "graph_edges_w": "lineitem",
+    "copurchase_census": "lineitem",
+    "ranked_events": "events",
+}
+
+
 def _index_dir(sf_dir: str, kind: str, fp: str) -> str:
     name = os.path.basename(sf_dir.rstrip("/")) or "corpus"
     return os.path.join(index_root(), kind, f"{name}-{fp}")
@@ -121,11 +145,11 @@ def load_or_build(
     sf_dir: str,
     kind: str,
     build: Callable[[], DataFrame],
-    table: str = "embeddings",
 ) -> DataFrame:
     """Return the persisted index frame for (corpus, kind), building it
     if absent or stale. The returned frame reads FROM THE STORE (so
     its lineage is one parquet scan, never the build computation)."""
+    table = KIND_TABLES.get(kind, "embeddings")
     fp = corpus_fingerprint(spark, sf_dir, table)
     dest = _index_dir(sf_dir, kind, fp)
     data_path = os.path.join(dest, "data")
@@ -149,65 +173,29 @@ def load_or_build(
     return spark.read.parquet(data_path)
 
 
-_ROWS_MEMO: dict[tuple, list] = {}
+_MEMO: dict[tuple, object] = {}
 
 
-def evict_stale(cache: dict, key: tuple) -> None:
-    """Drop cache entries that share ``key``'s prefix (everything but
-    the trailing corpus fingerprint) but carry a DIFFERENT fingerprint
-    (ADVICE r5): an in-session corpus rewrite would otherwise leave the
-    previous fingerprint's localCheckpointed RDD blocks pinned in the
-    block manager for the session's lifetime. Dropping the reference is
-    what ultimately frees the blocks (ContextCleaner releases
-    checkpoint RDDs on GC); unpersist() is applied eagerly where the
-    evicted entry exposes DataFrames."""
-    prefix = key[:-1]
-    for k in [k for k in cache if k[:-1] == prefix and k != key]:
-        v = cache.pop(k)
-        vals = v.values() if isinstance(v, dict) else v if isinstance(v, tuple) else [v]
-        for df in vals:
-            try:
+def memo(spark: SparkSession, sf_dir: str, kind: str, make: Callable[[], object]):
+    """This session's value of stage ``kind`` for the corpus at
+    ``sf_dir``: ``make()`` runs once per source-table fingerprint.
+    The fingerprint is re-listed on every call (metadata-only, a few
+    ms), so a rewritten corpus misses; the miss replaces the older
+    fingerprint's entry and unpersists its DataFrames (a dict's
+    values, a tuple's items, or the value itself)."""
+    fp = corpus_fingerprint(spark, sf_dir, KIND_TABLES.get(kind, "embeddings"))
+    key = (id(spark), index_root(), os.path.abspath(sf_dir), kind, fp)
+    if key in _MEMO:
+        return _MEMO[key]
+    value = make()
+    for k in [k for k in _MEMO if k[:-1] == key[:-1]]:
+        old = _MEMO.pop(k)
+        parts = old.values() if isinstance(old, dict) else old if isinstance(old, tuple) else [old]
+        for df in parts:
+            if isinstance(df, DataFrame):
                 df.unpersist()
-            except Exception:
-                pass
-
-
-def collect_index(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    build: Callable[[], DataFrame],
-    table: str = "embeddings",
-) -> list:
-    """Collected rows of a SMALL (bounded-by-construction) index
-    artifact, memoized per corpus fingerprint. The fingerprint is
-    re-listed on EVERY call (metadata-only, ~3 ms measured) so a
-    rewritten/appended corpus still invalidates instantly — staleness
-    stays structural; what the memo removes is the repeated
-    parquet-read job for the SAME fingerprint (~0.14 s/probe at sf0.1,
-    the llm_simsearch_pq r04 bench-guard flag; see docs/SCALE.md).
-    Only for driver-side literals (PQ codebook = 32 rows); frame-shaped
-    indexes (band tables) keep reading from the store per probe."""
-    fp = corpus_fingerprint(spark, sf_dir, table)
-    key = (index_root(), os.path.abspath(sf_dir), kind, table, fp)
-    if key not in _ROWS_MEMO:
-        evict_stale(_ROWS_MEMO, key)
-        _ROWS_MEMO[key] = load_or_build(spark, sf_dir, kind, build, table).collect()
-    return _ROWS_MEMO[key]
-
-
-# Which source table each index kind fingerprints against. Kinds not
-# listed default to the embeddings table (the ANN artifacts). The
-# janitor MUST consult this: the dedup stages key on the documents
-# fingerprint and the co-purchase graph on lineitem's, so a single
-# "keep" fingerprint would mark every other table's LIVE index stale.
-KIND_TABLES = {
-    "dedup_mh": "documents",
-    "dedup_cand": "documents",
-    "dedup_ws": "documents",
-    "graph_edges_w": "lineitem",
-    "ranked_events": "events",
-}
+    _MEMO[key] = value
+    return value
 
 
 def gc_stale(spark: SparkSession, sf_dir: str, table: str = "embeddings") -> list[str]:

@@ -24,8 +24,6 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,14 +200,10 @@ def lsh_candidates(mh: DataFrame, max_bucket: int | None = MAX_BUCKET) -> DataFr
     )
 
 
-_STAGE_CACHE: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def dedup_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared candidate-generation stage of the dedup DAG,
     MATERIALIZED through the fingerprint-keyed index store
-    (`operators/ann_index.py`, the ivf_centroids/pq_codebook
-    lifecycle): ``(mh, cand, ws)`` where
+    (`operators/ann_index.py`): ``(mh, cand, ws)`` where
 
     - ``mh``   = minhash signatures (doc_id, seed, mh),
     - ``cand`` = banded-LSH candidate pairs with the hot-bucket cap ON,
@@ -221,60 +215,36 @@ def dedup_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     `llm_dedup_clusters` all consume this stage, mirroring the
     production DAG where candidates are materialized once and every
     downstream verify/cluster/report stage reads the materialization
-    instead of re-deriving signatures per query. Through round 4 the
-    stage lived in a session cache of localCheckpointed frames —
-    correct, but the materialization died with the session; at 100 TB
-    these ARE tables (signatures + candidate pairs are rebuilt only
-    when the corpus changes, and every downstream job reads them).
-    Now each frame round-trips through
-    ``spark-warehouse/ann_index/dedup_{mh,cand,ws}/<corpus>-<fp>/``
-    keyed by the DOCUMENTS fingerprint: a rewritten/appended corpus
-    changes the fingerprint, so stale candidates are structurally
-    unreadable and the next consumer rebuilds. The returned frames are
-    plain parquet scans — fan-out consumers (cand is read twice by
-    `needed`, ws twice by the pair join) re-read the files, never
-    recompute the build, which is exactly the eager-localCheckpoint
-    economics the session cache existed for (docs/SCALE.md), made
-    durable. The session memo now only skips repeat fingerprint
-    listings and is itself fingerprint-keyed, so an in-session corpus
-    rewrite invalidates it too."""
-    from nova_pulsar_spark.operators.ann_index import corpus_fingerprint, load_or_build
+    instead of re-deriving signatures per query. Each frame
+    round-trips through ``spark-warehouse/ann_index/dedup_{mh,cand,ws}/``
+    keyed by the DOCUMENTS fingerprint, so a rewritten corpus is
+    rebuilt, never read stale.
 
-    fp = corpus_fingerprint(spark, sf_dir, "documents")
-    key = (id(spark), os.path.abspath(sf_dir), fp)
-    cached = _STAGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = load_table(spark, sf_dir, "documents")
-    mh = load_or_build(
-        spark, sf_dir, "dedup_mh", lambda: minhash_signatures(d), table="documents"
-    )
-    cand = load_or_build(
-        spark, sf_dir, "dedup_cand", lambda: lsh_candidates(mh), table="documents"
-    )
+    The memoized value holds EAGER localCheckpoints of the three store
+    reads: in-session fan-out consumers then read the block manager,
+    not parquet, per branch (keep_best alone reads cand+ws twice each;
+    measured +0.18 s/query at sf0.1 without them)."""
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
 
-    def build_ws() -> DataFrame:
-        needed = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        return d.join(needed, "doc_id", "left_semi").select(
-            "doc_id", "lang", F.array_distinct(_words(F.col("text"))).alias("words")
-        )
+    def make() -> tuple[DataFrame, DataFrame, DataFrame]:
+        d = load_table(spark, sf_dir, "documents")
+        mh = load_or_build(spark, sf_dir, "dedup_mh", lambda: minhash_signatures(d))
+        cand = load_or_build(spark, sf_dir, "dedup_cand", lambda: lsh_candidates(mh))
 
-    ws = load_or_build(spark, sf_dir, "dedup_ws", build_ws, table="documents")
-    # Session layer ON TOP of the durable store: localCheckpoint the
-    # store-read frames once per (session, fingerprint) so in-session
-    # fan-out consumers read the block manager, not parquet, per branch
-    # (keep_best alone reads cand+ws twice each; measured +0.18 s/query
-    # at sf0.1 without this). The store stays the source of truth —
-    # the checkpoint is just this session's cache of it.
-    from nova_pulsar_spark.operators.ann_index import evict_stale
+        def build_ws() -> DataFrame:
+            needed = (
+                cand.select(F.col("doc_a").alias("doc_id"))
+                .union(cand.select(F.col("doc_b").alias("doc_id")))
+                .distinct()
+            )
+            return d.join(needed, "doc_id", "left_semi").select(
+                "doc_id", "lang", F.array_distinct(_words(F.col("text"))).alias("words")
+            )
 
-    evict_stale(_STAGE_CACHE, key)
-    _STAGE_CACHE[key] = (mh.localCheckpoint(), cand.localCheckpoint(), ws.localCheckpoint())
-    return _STAGE_CACHE[key]
+        ws = load_or_build(spark, sf_dir, "dedup_ws", build_ws)
+        return mh.localCheckpoint(), cand.localCheckpoint(), ws.localCheckpoint()
+
+    return memo(spark, sf_dir, "dedup_candidates", make)
 
 
 def _pair_jaccard(cand: DataFrame, ws: DataFrame) -> DataFrame:
@@ -701,9 +671,6 @@ _KEEP_BEST_SQL = (
 )
 
 
-_CLUSTER_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 @register(
     "llm_dedup_clusters",
     sql=_CLUSTER_SQL,
@@ -721,64 +688,56 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it doubles as the fixpoint probe without a separate join.
 
     Like ``ivf_centroids``, the converged labels are an index-build
-    artifact: deterministic per corpus, computed once per (session,
-    sf_dir) and cached — repeat invocations read the materialized
-    assignment instead of re-running the fixpoint (the production
-    shape: the component table is persisted next to the corpus).
+    artifact, deterministic per corpus: the memoized value is the
+    labels frame over the fixpoint's last localCheckpoint, so repeat
+    invocations read the materialized assignment instead of re-running
+    the fixpoint.
     """
-    from nova_pulsar_spark.operators.ann_index import corpus_fingerprint
+    from nova_pulsar_spark.operators.ann_index import memo
 
-    # fingerprint-keyed (ADVICE r5): in-session corpus rewrites
-    # invalidate; stale entries evicted on insert
-    key = (id(spark), os.path.abspath(sf_dir), corpus_fingerprint(spark, sf_dir, "documents"))
-    cached = _CLUSTER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _, cand, ws = dedup_candidates(spark, sf_dir)
-    dup = (
-        _pair_jaccard(cand, ws)
-        .filter(F.col("jaccard") >= DUP_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
-    sym = (
-        dup.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .union(dup.select(F.col("doc_a").alias("src"), F.col("doc_a").alias("dst")))
-        .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_b").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # Lazy checkpoints: the scalar probe right after materializes the
-    # checkpoint in the SAME job, so each iteration costs one action
-    # (not checkpoint-job + probe-job) — halves the fixpoint job count.
-    labels = sym.groupBy("src").agg(F.min("dst").alias("label")).localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    while True:
-        prop = (
-            labels.alias("l")
-            .join(sym.alias("s"), F.col("s.src") == F.col("l.src"))
-            .select(F.col("s.dst").alias("src"), F.col("l.label").alias("label"))
+    def make() -> DataFrame:
+        _, cand, ws = dedup_candidates(spark, sf_dir)
+        dup = (
+            _pair_jaccard(cand, ws)
+            .filter(F.col("jaccard") >= DUP_THRESHOLD)
+            .select("doc_a", "doc_b")
         )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
+        sym = (
+            dup.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+            .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+            .union(dup.select(F.col("doc_a").alias("src"), F.col("doc_a").alias("dst")))
+            .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_b").alias("dst")))
+            .distinct()
             .localCheckpoint(eager=False)
         )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    out = labels.select(
-        F.col("src").alias("doc_id"),
-        F.col("label").alias("component_id"),
-        (F.col("label") == F.col("src")).alias("is_keeper"),
-    )
-    from nova_pulsar_spark.operators.ann_index import evict_stale
+        # Lazy checkpoints: the scalar probe right after materializes the
+        # checkpoint in the SAME job, so each iteration costs one action
+        # (not checkpoint-job + probe-job) — halves the fixpoint job count.
+        labels = sym.groupBy("src").agg(F.min("dst").alias("label")).localCheckpoint(eager=False)
+        prev_sum = labels.agg(F.sum("label")).first()[0]
+        while True:
+            prop = (
+                labels.alias("l")
+                .join(sym.alias("s"), F.col("s.src") == F.col("l.src"))
+                .select(F.col("s.dst").alias("src"), F.col("l.label").alias("label"))
+            )
+            labels = (
+                labels.unionByName(prop)
+                .groupBy("src")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=False)
+            )
+            new_sum = labels.agg(F.sum("label")).first()[0]
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        return labels.select(
+            F.col("src").alias("doc_id"),
+            F.col("label").alias("component_id"),
+            (F.col("label") == F.col("src")).alias("is_keeper"),
+        )
 
-    evict_stale(_CLUSTER_CACHE, key)
-    _CLUSTER_CACHE[key] = out
-    return out
+    return memo(spark, sf_dir, "dedup_clusters", make)
 
 
 @register(

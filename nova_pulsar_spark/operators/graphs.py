@@ -22,8 +22,6 @@ key needs a cap or a ladder.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -35,9 +33,6 @@ from nova_pulsar_spark.sources.tables import load_table
 # fixtures (and real carts) can be huge — pair-gen is quadratic in
 # basket size, so keep the first MAX_BASKET parts by partkey.
 MAX_BASKET = 32
-
-_CENSUS_CACHE: dict[tuple, dict[str, DataFrame]] = {}
-
 
 def copurchase_census(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Shared stages of the co-purchase graph census — the graph mirror
@@ -60,15 +55,8 @@ def copurchase_census(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     into 2+ consumers and a lazy cache would materialize once per
     consumer branch (the dedup_candidates lesson, docs/SCALE.md);
     they derive from the store scan, so nothing upstream of the edge
-    list is ever recomputed. The session memo is fingerprint-keyed,
-    so an in-session fact-table rewrite invalidates it too."""
-    from nova_pulsar_spark.operators.ann_index import corpus_fingerprint, load_or_build
-
-    fp = corpus_fingerprint(spark, sf_dir, "lineitem")
-    key = (id(spark), os.path.abspath(sf_dir), fp)
-    cached = _CENSUS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    list is ever recomputed."""
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
 
     def build_edges_w() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey").isNotNull())
@@ -93,42 +81,39 @@ def copurchase_census(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # on — one pair-gen shuffle serves the whole graph family
         return pairs.select("e.a", "e.b").groupBy("a", "b").agg(F.count(F.lit(1)).alias("w"))
 
-    # Session layer on top of the durable store (the dedup_candidates
-    # pattern): one block-manager copy per (session, fingerprint) for
-    # the fan-out consumers; the store stays the source of truth.
-    edges_w = load_or_build(
-        spark, sf_dir, "graph_edges_w", build_edges_w, table="lineitem"
-    ).localCheckpoint()
-    edges = edges_w.select("a", "b")
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()
-    )
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    ed = edges.join(da, "a").join(db, "b").localCheckpoint()
-    fwd = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    ).localCheckpoint()
-    adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).localCheckpoint()
-    out = {
-        "edges_w": edges_w,
-        "edges": edges,
-        "deg": deg,
-        "ed": ed,
-        "oriented": oriented,
-        "adj": adj,
-    }
-    from nova_pulsar_spark.operators.ann_index import evict_stale
+    def make() -> dict[str, DataFrame]:
+        # the store read and every fan-out derivation get one eager
+        # block-manager copy each; the store stays the source of truth
+        edges_w = load_or_build(spark, sf_dir, "graph_edges_w", build_edges_w).localCheckpoint()
+        edges = edges_w.select("a", "b")
+        deg = (
+            edges.select(F.col("a").alias("v"))
+            .unionAll(edges.select(F.col("b").alias("v")))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .localCheckpoint()
+        )
+        da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
+        db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
+        ed = edges.join(da, "a").join(db, "b").localCheckpoint()
+        fwd = (F.col("da") < F.col("db")) | (
+            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+        )
+        oriented = ed.select(
+            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
+        ).localCheckpoint()
+        adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).localCheckpoint()
+        return {
+            "edges_w": edges_w,
+            "edges": edges,
+            "deg": deg,
+            "ed": ed,
+            "oriented": oriented,
+            "adj": adj,
+        }
 
-    evict_stale(_CENSUS_CACHE, key)
-    _CENSUS_CACHE[key] = out
-    return out
+    return memo(spark, sf_dir, "copurchase_census", make)
 
 
 @register(

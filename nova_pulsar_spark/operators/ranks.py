@@ -32,8 +32,6 @@ twins stay bit-exact.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -120,20 +118,15 @@ def _nullsafe_join(left: DataFrame, right: DataFrame, group_cols: list[str]) -> 
     return out.drop("__rpid", *[f"__r_{g}" for g in group_cols])
 
 
-_EVENTS_RANK_CACHE: dict[tuple, DataFrame] = {}
-
-
 def ranked_events_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(event_type, value, event_id, rn, n)``: rank within
     ``event_type`` by ``(value ASC NULLS LAST, event_id)``, ``n`` =
     group row count — the SHARED input of ``median_exact``,
     ``quantiles_exact``, ``agg_mad_outliers`` (first pass) and
     ``dq_winsorize``. Materialized once per corpus fingerprint through
-    the index store (the ``dedup_candidates`` protocol,
-    ``operators/ann_index.py``): each consumer previously rebuilt the
-    identical grouped rank, paying the fixed checkpoint+offset
-    overhead per call (VERDICT r5 #1); now the first consumer builds
-    and persists, the rest are one parquet scan.
+    the index store (``operators/ann_index.py``): the first consumer
+    pays the grouped rank's fixed checkpoint+offset overhead and
+    persists it, the rest are one parquet scan.
 
     NULLS LAST is explicit because it is DuckDB's ASC default and
     Spark's is NULLS FIRST — with a NULL value in a group the engines'
@@ -146,19 +139,14 @@ def ranked_events_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the statistics-profile index job beside the
     corpus: rebuilt once per ingest batch (fingerprint moves), read by
-    every robust-statistics query in between."""
-    from nova_pulsar_spark.operators.ann_index import (
-        corpus_fingerprint,
-        evict_stale,
-        load_or_build,
-    )
-    from nova_pulsar_spark.sources.tables import load_table
+    every robust-statistics query in between.
 
-    fp = corpus_fingerprint(spark, sf_dir, "events")
-    key = (id(spark), os.path.abspath(sf_dir), fp)
-    hit = _EVENTS_RANK_CACHE.get(key)
-    if hit is not None:
-        return hit
+    The memoized value is the plain store read (lineage = one parquet
+    scan), no checkpoint: consumers scan the stage once per query, so
+    there is no in-query fan-out to amortize, and no blocks stay
+    pinned."""
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
+    from nova_pulsar_spark.sources.tables import load_table
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
@@ -169,14 +157,9 @@ def ranked_events_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism,
         )
 
-    out = load_or_build(spark, sf_dir, "ranked_events", build, table="events")
-    evict_stale(_EVENTS_RANK_CACHE, key)
-    # plain reference (lineage = one parquet scan) — no checkpoint:
-    # consumers scan the stage once per query, so there is no
-    # in-query fan-out to amortize, and not pinning blocks keeps the
-    # session cache memory-free (ADVICE r5 eviction note)
-    _EVENTS_RANK_CACHE[key] = out
-    return out
+    return memo(
+        spark, sf_dir, "ranked_events", lambda: load_or_build(spark, sf_dir, "ranked_events", build)
+    )
 
 
 def nullsafe_equi_join(

@@ -27,8 +27,6 @@ Scale notes (100 TB / billions of vectors):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -95,34 +93,20 @@ def llm_simsearch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CENTROID_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, cemb) coarse-quantizer centroids — the "index build" of
     the IVF pattern, PERSISTED through the ann_index store (build once,
     probe many; rebuilt automatically when the corpus fingerprint
     changes — see operators/ann_index.py for the lifecycle). The
-    session-local cache on top just saves the store read per query.
+    memoized value is the store read with ``.cache()``, so every probe
+    in the session shares one in-memory copy of the centroids.
 
     Per-(label, dim) mean uses a vec_id-ordered sequential fold so the
     result is deterministic under any partitioning; parquet round-trips
     IEEE doubles bit-exactly, so a loaded index probes identically to a
     freshly built one (oracle-pinned).
     """
-    from nova_pulsar_spark.operators.ann_index import (
-        corpus_fingerprint,
-        evict_stale,
-        load_or_build,
-    )
-
-    # fingerprint-keyed (ADVICE r5): an in-session corpus rewrite must
-    # not serve the previous corpus's cached index frame; stale
-    # entries are evicted (and unpersisted) on insert
-    key = (id(spark), os.path.abspath(sf_dir), corpus_fingerprint(spark, sf_dir, "embeddings"))
-    cached = _CENTROID_CACHE.get(key)
-    if cached is not None:
-        return cached
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
@@ -146,10 +130,10 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(array_sort(collect_list(struct(i, c))), s -> s.c)").alias("cemb")
         )
 
-    cent = load_or_build(spark, sf_dir, "ivf_centroids", build).cache()
-    evict_stale(_CENTROID_CACHE, key)
-    _CENTROID_CACHE[key] = cent
-    return cent
+    return memo(
+        spark, sf_dir, "ivf_centroids",
+        lambda: load_or_build(spark, sf_dir, "ivf_centroids", build).cache(),
+    )
 
 
 @register(
@@ -255,13 +239,9 @@ def _corpus_count(spark: SparkSession, e: DataFrame, sf_dir: str | None) -> int:
     fingerprint, shared by all consumers."""
     if sf_dir is None:
         return e.count()
-    from nova_pulsar_spark.operators.ann_index import corpus_fingerprint, evict_stale
+    from nova_pulsar_spark.operators.ann_index import memo
 
-    nk = (id(spark), os.path.abspath(sf_dir), corpus_fingerprint(spark, sf_dir, "embeddings"))
-    if nk not in _COUNT_MEMO:
-        evict_stale(_COUNT_MEMO, nk)
-        _COUNT_MEMO[nk] = e.count()
-    return _COUNT_MEMO[nk]
+    return memo(spark, sf_dir, "corpus_count", e.count)
 
 
 def _bands_cte(extra_cols: str = "") -> str:
@@ -340,9 +320,6 @@ _EMB_CAND_CTES = f"""sigs AS (
       JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id)"""
 
 
-_EMB_CAND_CACHE: dict[tuple, DataFrame] = {}
-_BANDS_CACHE: dict[tuple, DataFrame] = {}
-_COUNT_MEMO: dict[tuple, int] = {}
 # Store kind is layout-versioned: changing the plane/band geometry
 # orphans old index directories (the janitor reclaims them) instead of
 # silently probing a stale layout.
@@ -354,18 +331,10 @@ def _sign_bands(spark: SparkSession, e: DataFrame, sf_dir: str | None = None) ->
     both the candidate-pair join and the range-search probe read. With
     ``sf_dir`` given (a named corpus) it is PERSISTED through the
     ann_index store — built once, read from parquet by every probe,
-    rebuilt when the corpus fingerprint changes; the session cache on
-    top saves the store read per query. For ad-hoc frames (sf_dir
-    None — e.g. a streaming micro-batch probing against itself) it is
+    rebuilt when the corpus fingerprint changes; the memoized value is
+    the plain store read. For ad-hoc frames (sf_dir None — e.g. a
+    streaming micro-batch probing against itself) it is
     localCheckpoint-materialized for the session only."""
-    key = None
-    if sf_dir is not None:
-        from nova_pulsar_spark.operators.ann_index import corpus_fingerprint
-
-        # fingerprint-keyed (ADVICE r5): in-session rewrites invalidate
-        key = (id(spark), os.path.abspath(sf_dir), corpus_fingerprint(spark, sf_dir, "embeddings"))
-    if key is not None and key in _BANDS_CACHE:
-        return _BANDS_CACHE[key]
 
     def build() -> DataFrame:
         sigs = e.select("vec_id", _signs_spark().alias("signs"))
@@ -376,16 +345,13 @@ def _sign_bands(spark: SparkSession, e: DataFrame, sf_dir: str | None = None) ->
             F.substring(F.col("signs"), F.col("band") * BAND_BITS + 1, BAND_BITS).alias("sig"),
         )
 
-    if key is None:
+    if sf_dir is None:
         return build().localCheckpoint()
-    from nova_pulsar_spark.operators.ann_index import load_or_build
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
 
-    bands = load_or_build(spark, sf_dir, _BANDS_KIND, build)
-    from nova_pulsar_spark.operators.ann_index import evict_stale
-
-    evict_stale(_BANDS_CACHE, key)
-    _BANDS_CACHE[key] = bands
-    return bands
+    return memo(
+        spark, sf_dir, _BANDS_KIND, lambda: load_or_build(spark, sf_dir, _BANDS_KIND, build)
+    )
 
 
 def _prefix_bands(
@@ -438,44 +404,39 @@ def _prefix_bands(
 def _sign_lsh_candidates(spark: SparkSession, e: DataFrame, sf_dir: str | None = None) -> DataFrame:
     """(vec_a, vec_b) sign-LSH banded candidate pairs — the shared
     candidate-generation stage of the embedding dedup DAG (Spark side
-    of ``_EMB_CAND_CTES``). With ``sf_dir`` given, the candidate frame
-    is computed once per (session, corpus) and cached — both the
-    candidate-generation query and the label-filtered rerank consume
-    the same materialization (the production shape: the candidate
-    table is a persisted intermediate)."""
-    key = None
-    if sf_dir is not None:
-        from nova_pulsar_spark.operators.ann_index import corpus_fingerprint
+    of ``_EMB_CAND_CTES``), eagerly localCheckpointed. With ``sf_dir``
+    given, that checkpoint is memoized per corpus fingerprint — both
+    the candidate-generation query and the label-filtered rerank
+    consume the same materialization (the production shape: the
+    candidate table is a persisted intermediate)."""
 
-        key = (id(spark), os.path.abspath(sf_dir), corpus_fingerprint(spark, sf_dir, "embeddings"))
-    if key is not None and key in _EMB_CAND_CACHE:
-        return _EMB_CAND_CACHE[key]
-    pb = _prefix_bands(spark, e, sf_dir)
-    ok = (
-        pb.groupBy("band", "sig")
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") <= EMB_MAX_BUCKET)
-        .select("band", "sig")
-    )
-    capped = pb.join(ok, ["band", "sig"], "left_semi")
-    a, b = capped.alias("a"), pb.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+    def make() -> DataFrame:
+        pb = _prefix_bands(spark, e, sf_dir)
+        ok = (
+            pb.groupBy("band", "sig")
+            .agg(F.count(F.lit(1)).alias("nb"))
+            .filter(F.col("nb") <= EMB_MAX_BUCKET)
+            .select("band", "sig")
         )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if key is not None:
-        from nova_pulsar_spark.operators.ann_index import evict_stale
+        capped = pb.join(ok, ["band", "sig"], "left_semi")
+        a, b = capped.alias("a"), pb.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.sig") == F.col("b.sig"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            )
+            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+            .distinct()
+            .localCheckpoint()
+        )
 
-        evict_stale(_EMB_CAND_CACHE, key)
-        _EMB_CAND_CACHE[key] = cand
-    return cand
+    if sf_dir is None:
+        return make()
+    from nova_pulsar_spark.operators.ann_index import memo
+
+    return memo(spark, sf_dir, "emb_candidates", make)
 
 
 @register(
@@ -1204,9 +1165,10 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     per corpus, stored as (kidx, m, sub) rows, and every encode/probe
     reads the stored rows — PQ codes are only decodable against the
     exact codebook that produced them, so the codebook must version
-    with the corpus, which the fingerprint key enforces. Bounded
-    collect: PQ_M × PQ_K = 32 rows."""
-    from nova_pulsar_spark.operators.ann_index import collect_index
+    with the corpus, which the fingerprint key enforces. The memoized
+    value is the collected rows (bounded: PQ_M × PQ_K = 32), so repeat
+    probes skip the store-read job."""
+    from nova_pulsar_spark.operators.ann_index import load_or_build, memo
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
@@ -1227,7 +1189,10 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
             ).alias("sub"),
         )
 
-    rows = collect_index(spark, sf_dir, "pq_codebook", build)
+    rows = memo(
+        spark, sf_dir, "pq_codebook",
+        lambda: load_or_build(spark, sf_dir, "pq_codebook", build).collect(),
+    )
     by_mk = {(r["m"], r["kidx"]): [float(x) for x in r["sub"]] for r in rows}
     return [[by_mk[(m, k)] for k in range(PQ_K)] for m in range(PQ_M)]
 

@@ -1,7 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]`` (default 32
-threads); the same configs are what we would ship as cluster defaults
+Local mode runs ``local[$SPARK_GRAFT_CPUS]`` with a driver heap of
+``$SPARK_GRAFT_DRIVER_MEM``; unset, they default to the CPUs this
+process may run on and about 60% of the host's RAM, so the heap spills
+instead of outgrowing physical memory. The other configs are what we
+would ship as cluster defaults
 — AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), UTC session timezone (required for DuckDB-oracle
 timestamp parity), Arrow enabled for the Pandas-UDF paths.
@@ -20,7 +23,16 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def default_driver_memory() -> str:
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{kb * 6 // 10 // 1024}m"
 
 
 def get_spark(
@@ -51,7 +63,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

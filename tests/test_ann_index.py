@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from nova_pulsar_spark.operators import ann_index
 from nova_pulsar_spark.operators import similarity as S
 from nova_pulsar_spark.operators.ann_index import (
     corpus_fingerprint,
@@ -33,9 +34,7 @@ def _write_emb(spark, path, seed, n=12):
 
 
 def _clear_session_caches():
-    S._CENTROID_CACHE.clear()
-    S._BANDS_CACHE.clear()
-    S._EMB_CAND_CACHE.clear()
+    ann_index._MEMO.clear()
 
 
 def test_index_builds_loads_and_rebuilds_on_stale_corpus(spark, tmp_path, monkeypatch):

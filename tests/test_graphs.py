@@ -218,6 +218,7 @@ def test_doulion_sampled_triangles_unbiased(spark, tmp_path):
     within 10% of exact — measured 0.4% on this fixture) and every
     replicate respects the trivial estimator bounds."""
     import nova_pulsar_spark.operators.graphs as G
+    from nova_pulsar_spark.operators import ann_index
 
     d = str(tmp_path / "corpus")
     rows = []
@@ -227,7 +228,7 @@ def test_doulion_sampled_triangles_unbiased(spark, tmp_path):
     spark.createDataFrame(rows, "l_orderkey bigint, l_partkey bigint").write.mode(
         "overwrite"
     ).parquet(f"{d}/lineitem.parquet")
-    G._CENSUS_CACHE.clear()
+    ann_index._MEMO.clear()
 
     exact = G.graph_triangles(spark, d).collect()[0]
     assert exact.n_triangles > 50  # fixture is non-degenerate

@@ -1,4 +1,4 @@
-"""Round-12 profiling harness: per-query timing + plan capture.
+"""Profiling harness: per-query timing + plan capture.
 
 For each named query (default: the full bench HEADLINE list) this
 times, separately,
@@ -14,9 +14,11 @@ plan evidence). Usage:
 
     python tools/profile_queries.py [--runs N] [--plans TAG] [query ...]
 
-Prints one line per query: ``name build_s exec_s jobs`` where jobs is
-the number of Spark jobs the timed execution submitted (actions inside
-the query function — count()s, fixpoint probes — show up here).
+Prints one line per query: ``name build_s exec_s total_s``. Spark
+jobs per query (actions inside the query function — count()s,
+fixpoint probes) are counted by the traced perfbench run, as
+``operators.jobs`` (``python3 perfbench/run.py --workload pipeline
+--trace 1``).
 """
 
 from __future__ import annotations
@@ -52,7 +54,6 @@ def main() -> None:
     if args.plans:
         os.makedirs(plans_dir, exist_ok=True)
 
-    tracker = sc._jsc.sc().statusTracker()
     results = []
     for name in names:
         fn = regs[name].fn
@@ -60,7 +61,6 @@ def main() -> None:
         # warm-up (builds any index-store artifacts, fills codegen cache)
         fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         best_build = best_exec = float("inf")
-        jobs_before = len(tracker.getJobIdsForGroup(None))
         for _ in range(args.runs):
             t0 = time.perf_counter()
             df = fn(spark, args.sf_dir)

@@ -42,7 +42,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from nova_pulsar_spark.operators import similarity  # noqa: E402
+from nova_pulsar_spark.operators import ann_index, similarity  # noqa: E402
 from nova_pulsar_spark.registry import all_queries  # noqa: E402
 from nova_pulsar_spark.session import get_spark  # noqa: E402
 
@@ -60,7 +60,7 @@ def _best(fn, spark, sf_dir: str) -> float:
 
 
 def _clear_cand_cache() -> None:
-    similarity._EMB_CAND_CACHE.clear()
+    ann_index._MEMO.clear()
 
 
 def main(base: str, merge_into: str | None = None) -> dict:
