@@ -9,6 +9,13 @@ would ship as cluster defaults
 coalescing), UTC session timezone (required for DuckDB-oracle
 timestamp parity), Arrow enabled for the Pandas-UDF paths.
 
+Python workers run under :mod:`nova_pulsar_spark.worker_daemon`
+(``spark.python.daemon.module``), which stops them re-reading
+``pyspark.zip`` on every task, and get the checkout root on their
+``PYTHONPATH``, so UDFs that reference this package resolve from any
+driver working directory. A session built without :func:`get_spark`
+keeps Spark's stock daemon.
+
 At 100 TB the knobs that matter change from "shuffle partitions ==
 cores" to "shuffle partitions sized so each task's input is
 100-500 MB"; AQE's coalescing makes the initial number mostly a
@@ -20,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the nova_pulsar_spark package
+CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -64,6 +74,8 @@ def get_spark(
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
+        .config("spark.python.daemon.module", "nova_pulsar_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -159,7 +159,20 @@ def lifecycle_batch(status_events: DataFrame, stall_minutes: int = STALL_MINUTES
 
 def lifecycle_stream(status_stream: DataFrame, stall_minutes: int = STALL_MINUTES) -> DataFrame:
     """Streaming path: applyInPandasWithState with processing-time
-    timeout (the watcher's silence-kill analog)."""
+    timeout (the watcher's silence-kill analog).
+
+    This query never finishes on its own. A wall-clock timeout can fall
+    due at any moment, so after every batch Spark plans another, no-data
+    batch to check for it, whether or not any state is left. The query's
+    ``recentProgress`` shows it on the status fixture: one batch with 19
+    input rows, then only 0-row batches, first holding 12 state rows
+    and, once every group has timed out and been dropped, 0. So
+    ``Trigger.AvailableNow`` never terminates, ``processAllAvailable``
+    never returns and ``awaitTermination`` only times out: wait for the
+    input rows in ``recentProgress``, then call ``stop()``. ``--once``
+    runs must use :func:`lifecycle_stream_event_time`, whose no-data
+    batches stop when the watermark stops moving.
+    """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -26,6 +27,20 @@ def _write_status_fixture_files(directory: str) -> int:
         rec = {c: (v.isoformat() if hasattr(v, "isoformat") else v) for c, v in zip(cols, row)}
         atomic_write_json(directory, f"ev-{i:04d}.json", rec)
     return len(STATUS_EVENTS.rows)
+
+
+def _await_input_rows(q, n: int, timeout_s: float = 180) -> None:
+    """Block until the query's batches have read ``n`` input rows, for
+    queries that never terminate (see ``state.lifecycle_stream``). A
+    batch's progress is reported after its sink commit, so its output is
+    in the sink by then."""
+    deadline = time.monotonic() + timeout_s
+    while sum(p["numInputRows"] for p in q.recentProgress) < n:
+        if not q.isActive:
+            raise AssertionError(f"query stopped before reading {n} rows: {q.exception()}")
+        if time.monotonic() > deadline:
+            raise AssertionError(f"query read fewer than {n} rows in {timeout_s} s")
+        time.sleep(0.2)
 
 
 def test_topic_produce_consume_available_now(spark, tmp_path):
@@ -51,7 +66,7 @@ def test_topic_produce_consume_available_now(spark, tmp_path):
 
 def test_lifecycle_stream_matches_batch(spark, tmp_path):
     d = str(tmp_path / "status_topic2")
-    _write_status_fixture_files(d)
+    n = _write_status_fixture_files(d)
     topic = Topic(base_dir=d, schema=STATUS_SCHEMA)
     q = (
         lifecycle_stream(topic.reader(spark))
@@ -62,7 +77,10 @@ def test_lifecycle_stream_matches_batch(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        _await_input_rows(q, n)
+    finally:
+        q.stop()
     stream_rows = {
         (r.plan_id, r.phase, r.kind, r.from_status, r.to_status)
         for r in spark.sql("SELECT * FROM lifecycle_out").collect()
@@ -227,7 +245,7 @@ def test_lifecycle_stream_on_rocksdb_state_store(spark, tmp_path):
     from nova_pulsar_spark.streaming.statestore import rocksdb_state_store
 
     d = str(tmp_path / "status_topic_rocks")
-    _write_status_fixture_files(d)
+    n = _write_status_fixture_files(d)
     topic = Topic(base_dir=d, schema=STATUS_SCHEMA)
     with rocksdb_state_store(spark):
         q = (
@@ -239,7 +257,10 @@ def test_lifecycle_stream_on_rocksdb_state_store(spark, tmp_path):
             .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
             .start()
         )
-        q.awaitTermination(180)
+        try:
+            _await_input_rows(q, n)
+        finally:
+            q.stop()
         progresses = q.recentProgress
     stream_rows = {
         (r.plan_id, r.phase, r.kind, r.from_status, r.to_status)
