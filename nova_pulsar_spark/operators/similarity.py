@@ -55,6 +55,23 @@ def cosine(a: str, b: str) -> F.Column:
     return F.when(den != 0, _fold_dot(a, b) / den)
 
 
+def _double_array(vals) -> str:
+    """Spark SQL literal array of DOUBLEs. CAST per element: Spark
+    parses a bare decimal literal as DECIMAL, which would leak into the
+    output type (e.g. through ``element_at``)."""
+    return "array(" + ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
+
+
+def _spark_sqdist(arr: str, lit: str) -> str:
+    """Spark SQL squared L2 distance of array expression ``arr`` to the
+    literal array ``lit``, folded in element order."""
+    return (
+        f"aggregate(zip_with({arr}, {lit}, "
+        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
 def _sql_dot(a: str, b: str) -> str:
     """Same sequential fold on the DuckDB side (1-based list index)."""
     return (
@@ -852,18 +869,8 @@ def llm_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.orderBy("vec_id").limit(K_SEEDS).select("vec_id", "embedding").collect()
     )
 
-    def lit_arr(vec) -> str:
-        return "array(" + ", ".join(repr(float(x)) for x in vec) + ")"
-
-    def sqd(seed_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(embedding, {seed_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
     terms = ", ".join(
-        f"struct({sqd(lit_arr(r['embedding']))} AS d2, "
+        f"struct({_spark_sqdist('embedding', _double_array(r['embedding']))} AS d2, "
         f"CAST({int(r['vec_id'])} AS BIGINT) AS centroid_id)"
         for r in seeds
     )
@@ -1026,19 +1033,10 @@ def kmeans_iterate(
     ]
     wcss_hist: list[float] = []
 
-    def lit_arr(vec) -> str:
-        return "array(" + ", ".join(repr(float(x)) for x in vec) + ")"
-
-    def sqd(seed_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(embedding, {seed_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
     for _ in range(iters):
         terms = ", ".join(
-            f"struct({sqd(lit_arr(vec))} AS d2, {cid} AS cid)" for cid, vec in cents
+            f"struct({_spark_sqdist('embedding', _double_array(vec))} AS d2, {cid} AS cid)"
+            for cid, vec in cents
         )
         best = F.expr(f"array_min(array({terms}))")
         assigned = e.select(
@@ -1222,23 +1220,12 @@ def pq_adc_scores(corpus: DataFrame, spark: SparkSession, sf_dir: str) -> DataFr
             row_d.append(acc)
         dtab.append(row_d)
 
-    def sub_sqd(m: int, sub_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(slice(embedding, {m * PQ_SUB + 1}, {PQ_SUB}), {sub_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
-    def arr_lit(vals) -> str:
-        # CAST per element: Spark parses bare decimal literals as
-        # DECIMAL, which would leak into the output type via element_at
-        return "array(" + ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-
     # per-subspace code: argmin(d2, kidx) over the K codebook entries
     code_cols = []
     for m in range(PQ_M):
+        sub = f"slice(embedding, {m * PQ_SUB + 1}, {PQ_SUB})"
         terms = ", ".join(
-            f"struct({sub_sqd(m, arr_lit(books[m][k]))} AS d2, {k} AS kidx)"
+            f"struct({_spark_sqdist(sub, _double_array(books[m][k]))} AS d2, {k} AS kidx)"
             for k in range(PQ_K)
         )
         code_cols.append(F.expr(f"array_min(array({terms})).kidx").alias(f"c{m}"))
@@ -1247,14 +1234,9 @@ def pq_adc_scores(corpus: DataFrame, spark: SparkSession, sf_dir: str) -> DataFr
     # ADC: m-ordered fixed sum of distance-table lookups (literal arrays)
     adc = None
     for m in range(PQ_M):
-        lut = F.expr(f"element_at({arr_lit(dtab[m])}, c{m} + 1)")
+        lut = F.expr(f"element_at({_double_array(dtab[m])}, c{m} + 1)")
         adc = lut if adc is None else adc + lut
-    qlit = arr_lit(qvec)
-    true_d2 = F.expr(
-        f"aggregate(zip_with(embedding, {qlit}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    true_d2 = F.expr(_spark_sqdist("embedding", _double_array(qvec)))
     return coded.select(
         "vec_id", "label", adc.alias("adc_d2"), true_d2.alias("true_d2")
     )
@@ -1439,18 +1421,8 @@ def llm_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     seed_rows = e.orderBy("vec_id").limit(SEMDEDUP_K).select("vec_id", "embedding").collect()
 
-    def lit_arr(vec) -> str:
-        return "array(" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vec) + ")"
-
-    def sqd(seed_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(embedding, {seed_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
     terms = ", ".join(
-        f"struct({sqd(lit_arr(r['embedding']))} AS d2, "
+        f"struct({_spark_sqdist('embedding', _double_array(r['embedding']))} AS d2, "
         f"CAST({int(r['vec_id'])} AS BIGINT) AS cluster_id)"
         for r in seed_rows
     )
@@ -2168,18 +2140,8 @@ def llm_semdedup_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     seed_rows = e.orderBy("vec_id").limit(SEMDEDUP_K).select("vec_id", "embedding").collect()
 
-    def lit_arr(vec) -> str:
-        return "array(" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vec) + ")"
-
-    def sqd(seed_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(embedding, {seed_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
     terms = ", ".join(
-        f"struct({sqd(lit_arr(r['embedding']))} AS d2, "
+        f"struct({_spark_sqdist('embedding', _double_array(r['embedding']))} AS d2, "
         f"CAST({int(r['vec_id'])} AS BIGINT) AS cluster_id)"
         for r in seed_rows
     )
@@ -2392,20 +2354,11 @@ def llm_simsearch_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     books = pq_codebook(spark, sf_dir)
 
-    def sub_sqd(m: int, sub_lit: str) -> str:
-        return (
-            f"aggregate(zip_with(slice(embedding, {m * PQ_SUB + 1}, {PQ_SUB}), {sub_lit}, "
-            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
-    def arr_lit(vals) -> str:
-        return "array(" + ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-
     dist = None
     for m in range(PQ_M):
+        sub = f"slice(embedding, {m * PQ_SUB + 1}, {PQ_SUB})"
         terms = ", ".join(
-            f"struct({sub_sqd(m, arr_lit(books[m][k]))} AS d2, {k} AS kidx)"
+            f"struct({_spark_sqdist(sub, _double_array(books[m][k]))} AS d2, {k} AS kidx)"
             for k in range(PQ_K)
         )
         dm = F.expr(f"array_min(array({terms})).d2")

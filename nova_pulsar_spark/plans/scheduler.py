@@ -205,8 +205,8 @@ def best_plan(plans: DataFrame, phases: DataFrame) -> DataFrame:
 # that contract with the scorer injectable (any callable — subprocess,
 # HTTP, in-process model); no external binary is assumed.
 #
-# Round 10: the seam is demonstrated LIVE against a real `claude` CLI
-# on this host (tools/live_llm_probe.py → S11_LIVE_r10.json): a
+# The seam is demonstrated LIVE against a real `claude` CLI
+# (tools/live_llm_probe.py → artifacts/r10/S11_LIVE_r10.json): a
 # reference-policy probe whose validated reply agreed with O1, and an
 # override-policy probe whose validated reply provably OVERRODE the
 # deterministic pick — both through the full dispatch_once path in the

@@ -130,15 +130,20 @@ def _step(state: dict[str, Any], ev: dict[str, Any], stall_minutes: int) -> list
     return out
 
 
-def _process_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], stall_minutes: int = STALL_MINUTES
-) -> Iterator[pd.DataFrame]:
-    state: dict[str, Any] = {}
+def _fold(st: dict[str, Any], pdfs, stall_minutes) -> list[dict[str, Any]]:
+    """Fold each batch's events, in event order, through :func:`_step`."""
     rows: list[dict[str, Any]] = []
     for pdf in pdfs:
         pdf = pdf.sort_values(["updated_at", "tool_count"])
         for ev in pdf.to_dict("records"):
-            rows.extend(_step(state, ev, stall_minutes))
+            rows.extend(_step(st, ev, stall_minutes))
+    return rows
+
+
+def _process_group(
+    key: tuple, pdfs: Iterator[pd.DataFrame], stall_minutes: int = STALL_MINUTES
+) -> Iterator[pd.DataFrame]:
+    rows = _fold({}, pdfs, stall_minutes)
     if rows:
         yield pd.DataFrame(rows)
 
@@ -147,14 +152,71 @@ def lifecycle_batch(status_events: DataFrame, stall_minutes: int = STALL_MINUTES
     """Deterministic batch rendition of the state machine (replay =
     streaming recovery semantics: same events → same transitions)."""
 
-    def fn(key, pdfs):
-        return _process_group(key, pdfs, stall_minutes)
+    def fn(key, pdf):
+        out = list(_process_group(key, iter([pdf]), stall_minutes))
+        return pd.concat(out or [pd.DataFrame(columns=TRANSITION_SCHEMA.names)])
 
     return (
         status_events.repartition("plan_id", "phase")
         .groupBy("plan_id", "phase")
-        .applyInPandas(lambda key, pdf: pd.concat(list(_process_group(key, iter([pdf]), stall_minutes)) or [pd.DataFrame(columns=[f.name for f in TRANSITION_SCHEMA])]), schema=TRANSITION_SCHEMA)
+        .applyInPandas(fn, schema=TRANSITION_SCHEMA)
     )
+
+
+def _state_fn(stall_minutes, fired_at, arm):
+    """The ``applyInPandasWithState`` function of both stream renditions.
+
+    Events: unpack the ``GroupState`` tuple, fold the events through
+    :func:`_step`, write the state back and ``arm`` the next timeout.
+    A fired timeout emits a stall incident at ``fired_at(last_epoch,
+    retries)`` and re-arms one stall window later; past the retry cap
+    it emits ``killed`` and drops the state (orbiter.md:183-196,
+    pulsar.md:383). ``arm(state, due_epoch)`` receives the event-time
+    instant, in epoch seconds, at which the next stall falls due.
+    """
+    stall_s = int(stall_minutes * 60)
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            (status, tool_count, owner, retries, last_epoch) = state.get
+            retries = int(retries or 0)
+            capped = retries >= RETRY_CAP
+            yield pd.DataFrame(
+                [
+                    {
+                        "plan_id": key[0],
+                        "phase": key[1],
+                        "kind": "killed" if capped else "stalled",
+                        "from_status": status,
+                        "to_status": "killed" if capped else "retrying",
+                        "tool_count": tool_count,
+                        "at": fired_at(last_epoch, retries),
+                    }
+                ]
+            )
+            if capped:
+                state.remove()
+            else:
+                state.update((status, tool_count, owner, retries + 1, last_epoch))
+                arm(state, int(last_epoch) + stall_s * (retries + 2))
+            return
+        st = dict(zip(STATE_SCHEMA.names, state.get)) if state.exists else {}
+        rows = _fold(st, pdfs, stall_minutes)
+        last_epoch = int(st.get("last_update_epoch") or 0)
+        state.update(
+            (
+                st.get("status"),
+                int(st.get("tool_count") or 0),
+                st.get("owner_thread"),
+                int(st.get("retries") or 0),
+                last_epoch,
+            )
+        )
+        arm(state, last_epoch + stall_s)
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return fn
 
 
 def lifecycle_stream(status_stream: DataFrame, stall_minutes: int = STALL_MINUTES) -> DataFrame:
@@ -173,61 +235,14 @@ def lifecycle_stream(status_stream: DataFrame, stall_minutes: int = STALL_MINUTE
     runs must use :func:`lifecycle_stream_event_time`, whose no-data
     batches stop when the watermark stops moving.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # silence timeout: stall incident, retry up to the cap, then
-            # kill and drop the state (orbiter.md:183-196, pulsar.md:383)
-            (status, tool_count, owner, retries, last_epoch) = state.get
-            capped = int(retries or 0) >= RETRY_CAP
-            yield pd.DataFrame(
-                [
-                    {
-                        "plan_id": key[0],
-                        "phase": key[1],
-                        "kind": "killed" if capped else "stalled",
-                        "from_status": status,
-                        "to_status": "killed" if capped else "retrying",
-                        "tool_count": tool_count,
-                        "at": pd.Timestamp.utcnow().tz_localize(None),
-                    }
-                ]
-            )
-            if capped:
-                state.remove()
-            else:
-                state.update((status, tool_count, owner, int(retries or 0) + 1, last_epoch))
-                state.setTimeoutDuration(int(stall_minutes * 60 * 1000))
-            return
-        st: dict[str, Any] = {}
-        if state.exists:
-            (status, tool_count, owner, retries, last_epoch) = state.get
-            st = {
-                "status": status,
-                "tool_count": tool_count,
-                "owner_thread": owner,
-                "retries": retries,
-                "last_update_epoch": last_epoch,
-            }
-        rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["updated_at", "tool_count"])
-            for ev in pdf.to_dict("records"):
-                rows.extend(_step(st, ev, stall_minutes))
-        state.update(
-            (
-                st.get("status"),
-                int(st.get("tool_count") or 0),
-                st.get("owner_thread"),
-                int(st.get("retries") or 0),
-                int(st.get("last_update_epoch") or 0),
-            )
-        )
-        state.setTimeoutDuration(int(stall_minutes * 60 * 1000))
-        if rows:
-            yield pd.DataFrame(rows)
-
+    stall_ms = int(stall_minutes * 60 * 1000)
+    fn = _state_fn(
+        stall_minutes,
+        fired_at=lambda last_epoch, retries: pd.Timestamp.utcnow().tz_localize(None),
+        arm=lambda state, due_epoch: state.setTimeoutDuration(stall_ms),
+    )
     return (
         status_stream.groupBy(F.col("plan_id"), F.col("phase"))
         .applyInPandasWithState(
@@ -256,65 +271,21 @@ def lifecycle_stream_event_time(
     `at` is wall-clock). Retries re-arm one stall window later until
     the cap, then the phase is killed and its state dropped.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     stall_s = int(stall_minutes * 60)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            (status, tool_count, owner, retries, last_epoch) = state.get
-            capped = int(retries or 0) >= RETRY_CAP
-            fired_at = int(last_epoch) + stall_s * (int(retries or 0) + 1)
-            yield pd.DataFrame(
-                [
-                    {
-                        "plan_id": key[0],
-                        "phase": key[1],
-                        "kind": "killed" if capped else "stalled",
-                        "from_status": status,
-                        "to_status": "killed" if capped else "retrying",
-                        "tool_count": tool_count,
-                        "at": pd.Timestamp(fired_at, unit="s"),
-                    }
-                ]
-            )
-            if capped:
-                state.remove()
-            else:
-                state.update((status, tool_count, owner, int(retries or 0) + 1, last_epoch))
-                nxt_ms = (int(last_epoch) + stall_s * (int(retries or 0) + 2)) * 1000
-                # the armed instant must sit above the current watermark
-                state.setTimeoutTimestamp(max(nxt_ms, state.getCurrentWatermarkMs() + 1))
-            return
-        st: dict[str, Any] = {}
-        if state.exists:
-            (status, tool_count, owner, retries, last_epoch) = state.get
-            st = {
-                "status": status,
-                "tool_count": tool_count,
-                "owner_thread": owner,
-                "retries": retries,
-                "last_update_epoch": last_epoch,
-            }
-        rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["updated_at", "tool_count"])
-            for ev in pdf.to_dict("records"):
-                rows.extend(_step(st, ev, stall_minutes))
-        state.update(
-            (
-                st.get("status"),
-                int(st.get("tool_count") or 0),
-                st.get("owner_thread"),
-                int(st.get("retries") or 0),
-                int(st.get("last_update_epoch") or 0),
-            )
-        )
-        nxt_ms = (int(st.get("last_update_epoch") or 0) + stall_s) * 1000
-        state.setTimeoutTimestamp(max(nxt_ms, state.getCurrentWatermarkMs() + 1))
-        if rows:
-            yield pd.DataFrame(rows)
+    def arm(state, due_epoch: int) -> None:
+        # the armed instant must sit above the current watermark
+        state.setTimeoutTimestamp(max(due_epoch * 1000, state.getCurrentWatermarkMs() + 1))
 
+    fn = _state_fn(
+        stall_minutes,
+        fired_at=lambda last_epoch, retries: pd.Timestamp(
+            int(last_epoch) + stall_s * (retries + 1), unit="s"
+        ),
+        arm=arm,
+    )
     return (
         status_stream.groupBy(F.col("plan_id"), F.col("phase"))
         .applyInPandasWithState(

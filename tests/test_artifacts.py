@@ -14,12 +14,13 @@ import re
 import pytest
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ARTIFACTS = os.path.join(HERE, "artifacts")
 
 
 def _latest(pattern: str) -> str | None:
     paths = sorted(
-        glob.glob(os.path.join(HERE, pattern)),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
+        glob.glob(os.path.join(ARTIFACTS, "r*", pattern)),
+        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
     )
     return paths[-1] if paths else None
 
@@ -130,7 +131,7 @@ def test_bench_spread_artifact_from_round9():
     if path is None or int(re.search(r"_r(\d+)", path).group(1)) < 9:
         pytest.skip("no round>=9 local bench artifact yet")
     n = int(re.search(r"_r(\d+)", path).group(1))
-    spread_path = os.path.join(HERE, f"BENCH_SPREAD_r{n:02d}.json")
+    spread_path = os.path.join(ARTIFACTS, f"r{n:02d}", f"BENCH_SPREAD_r{n:02d}.json")
     assert os.path.exists(spread_path), (
         f"BENCH_LOCAL_r{n:02d}.json committed without its BENCH_SPREAD twin"
     )

@@ -200,7 +200,7 @@ def test_live_llm_transcript_replays_deterministically(spark, tmp_path):
     treats the recorded replies identically — no CLI needed."""
     import glob
 
-    transcripts = sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "S11_LIVE_r*.json")))
+    transcripts = sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "artifacts", "r*", "S11_LIVE_r*.json")))
     if not transcripts:
         import pytest
 

@@ -1,24 +1,12 @@
-"""Adopt the driver's end-of-round bench run as the operative floor.
+"""Render the operative bench floor into ``docs/SCALE.md``.
 
-VERDICT r10 #1: for two rounds running, the driver's own post-final-
-commit bench run overwrote ``BENCH_LOCAL_r{N}.json`` (guard-accepted,
-faster, clean-HEAD) while ``docs/SCALE.md`` still quoted the builder's
-earlier committed number — a once-per-round manual reconciliation
-chore (r9 -> commit 54f7404, r10 -> this tool). This makes the
-reconciliation STRUCTURAL:
+The single operative-floor quote in ``docs/SCALE.md`` lives between
+``ADOPTED_BENCH_FLOOR`` markers and is regenerated from the newest
+committed ``artifacts/r*/BENCH_LOCAL_r*.json`` by this tool, never
+hand-edited. ``tests/test_artifacts.py::test_scale_md_adopted_floor_matches_artifact``
+re-renders the block from the artifact and fails on any divergence.
 
-- the single operative-floor quote in ``docs/SCALE.md`` lives between
-  ``ADOPTED_BENCH_FLOOR`` markers and is REGENERATED from the newest
-  committed ``BENCH_LOCAL_r*.json`` artifact by this tool — never
-  hand-edited;
-- ``tests/test_artifacts.py::test_scale_md_adopted_floor_matches_artifact``
-  re-renders the block from the artifact and fails the suite on any
-  divergence, so a driver overwrite that lands after the final commit
-  is caught at the NEXT round's start by running this tool first.
-
-Round-start ritual (documented in README):
-
-    python tools/adopt_driver_bench.py && git add -A && git commit
+    python tools/adopt_driver_bench.py
 
 Idempotent: re-running against an already-adopted artifact reports
 ``unchanged`` and leaves the doc byte-identical.
@@ -41,8 +29,8 @@ END = "<!-- ADOPTED_BENCH_FLOOR:END -->"
 
 def find_latest_local() -> str:
     paths = sorted(
-        glob.glob(os.path.join(HERE, "BENCH_LOCAL_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
+        glob.glob(os.path.join(HERE, "artifacts", "r*", "BENCH_LOCAL_r*.json")),
+        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
     )
     if not paths:
         raise SystemExit("no BENCH_LOCAL_r*.json artifact to adopt")

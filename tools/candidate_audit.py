@@ -17,17 +17,16 @@ way as tools/make_scaled_sf.py so the near-dup structure is realistic
 10-cliques — the re-crawled-corpus shape the caps exist for).
 
 Usage:
-    python tools/candidate_audit.py [base_sf_dir] [out.json]
+    python tools/candidate_audit.py --out artifacts/<dir>/SCALING3.json [base_sf_dir]
 
-Prints one JSON line and writes SCALING3_r{N}.json by default.
+Prints one JSON line and writes the same record to ``--out``.
 """
 
 from __future__ import annotations
 
-import glob
+import argparse
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
@@ -524,7 +523,11 @@ def audit_dir(spark, sf_dir: str) -> dict:
 
 
 def main() -> dict:
-    base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("base_sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("--out", required=True, help="path of the JSON record")
+    args = ap.parse_args()
+    base, out = args.base_sf_dir, args.out
     spark = get_spark("candidate-audit")
     spark.sparkContext.setLogLevel("ERROR")
     results = {"sf0.1": audit_dir(spark, base)}
@@ -595,14 +598,6 @@ def main() -> dict:
         "with the verify tier's word-set Jaccard>=0.8 bar"
     )
     print(json.dumps(results))
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        for m in [re.search(r"BENCH_r(\d+)", p)]
-    ]
-    nr = (max(rounds) if rounds else 0) + 1
-    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(here, f"SCALING3_r{nr:02d}.json")
     with open(out, "w") as f:
         json.dump(results, f, indent=1)
     return results

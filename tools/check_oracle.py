@@ -9,17 +9,14 @@ possible). Usage:
     python tools/check_oracle.py [--out FILE] [--sample N --seed S] [sf_dir] [query ...]
 
 ``--out FILE`` additionally writes the PASS/FAIL lines + summary to
-FILE — the per-round sweep artifact (ORACLE_SWEEP_r{N}.txt /
-EDGE_SWEEP_r{N}.txt) that lets the judge diff the driver's 50-query
-sample against the full registry surface without re-running Spark.
+FILE, a sweep record (e.g. under ``artifacts/``) that can be diffed
+against another sweep without re-running Spark.
 
-``--sample N --seed S`` (VERDICT r8 #4) checks a seeded random subset
-of N registered keys instead of the full registry — a rotating
-driver-style sample. The driver's own 50-key sample has been frozen
-since round 4; running a DIFFERENT random 50 each round (seed = the
-round number, by convention) catches key-set-dependent environment
-drift the frozen sample cannot. The sampled key list is printed in
-the header so the sweep artifact is self-describing.
+``--sample N --seed S`` checks a seeded random subset of N registered
+keys instead of the full registry. A different seed picks a different
+subset, which catches key-set-dependent environment drift a fixed
+sample cannot. The sampled key list is printed in the header so the
+sweep record is self-describing.
 """
 
 from __future__ import annotations

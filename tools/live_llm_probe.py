@@ -7,9 +7,7 @@ dispatch choice (`scripts/starry-daemon.sh:136-151`: `claude -p ...
 --model haiku --max-turns 5`), validates the reply against a
 `project:plan_id` pattern + queue membership, and falls back to the
 deterministic O1 ordering on any failure (`agents/orbiter.md:25-33`).
-Rounds 3-9 accepted "no CLI in the sandbox" as the reason S11 stayed
-partial-by-environment; round 9's judge found the binary present, so
-this tool MEASURES the acceptance instead of assuming it:
+This tool measures that seam against a real CLI:
 
 probe A ("reference policy"): the scorer prompt states the O1 policy
   (lowest priority, oldest first) — the live model should agree with
@@ -23,12 +21,12 @@ Each probe runs the full daemon path (`dispatch_once` → `select_plan`
 → `subprocess_scorer`) against the two-project fixture from
 tests/test_daemon.py, with every byte of the exchange recorded:
 candidates JSON (stdin), argv, raw stdout reply, the dispatched plan,
-and the O1 pick for contrast.  Output: S11_LIVE_r{N}.json at the repo
-root.  On a host without the CLI (or without auth/network) the
+and the O1 pick for contrast, in the JSON file named by ``--out``.
+On a host without the CLI (or without auth/network) the
 failure output is recorded verbatim instead — either way the
 acceptance is evidence, not assumption.
 
-Usage: python tools/live_llm_probe.py [--round N] [--model haiku]
+Usage: python tools/live_llm_probe.py --out artifacts/<dir>/S11_LIVE.json [--model haiku]
 """
 
 from __future__ import annotations
@@ -156,7 +154,7 @@ def main():
     from datetime import datetime
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=10)
+    ap.add_argument("--out", required=True, help="path of the JSON transcript")
     ap.add_argument("--model", default="haiku")
     ap.add_argument("--timeout", type=float, default=120.0)
     args = ap.parse_args()
@@ -167,7 +165,6 @@ def main():
 
     out = {
         "artifact": "S11_LIVE",
-        "round": args.round,
         "generated_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "host_cli": None,
         "o1_deterministic_pick": o1_pick,
@@ -221,13 +218,9 @@ def main():
         else:
             out["verdict"] = "cli_replied_but_pick_unexpected"
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        f"S11_LIVE_r{args.round:02d}.json",
-    )
-    with open(path, "w") as f:
+    with open(args.out, "w") as f:
         json.dump(out, f, indent=2)
-    print(json.dumps({"verdict": out["verdict"], "artifact": path}))
+    print(json.dumps({"verdict": out["verdict"], "artifact": args.out}))
     return 0 if out["verdict"] == "live_llm_dispatch_demonstrated" else 1
 
 

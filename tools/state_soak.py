@@ -17,17 +17,16 @@ history length (changelog checkpointing means a restart replays the
 latest snapshot + tail deltas, never the full ingest history).
 
 Usage:
-    python tools/state_soak.py [n_docs_1x] [out.json]
+    python tools/state_soak.py --out artifacts/<dir>/STATE_SOAK.json [n_docs_1x]
 
-Prints one JSON line and (by default) writes STATE_SOAK_r{N}.json.
+Prints one JSON line and writes the same record to ``--out``.
 """
 
 from __future__ import annotations
 
-import glob
+import argparse
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
@@ -369,7 +368,11 @@ def soak(spark, n_docs: int, workdir: str, modality: str = "text") -> dict:
 
 
 def main() -> dict:
-    n1 = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_docs_1x", nargs="?", type=int, default=1000)
+    ap.add_argument("--out", required=True, help="path of the JSON record")
+    args = ap.parse_args()
+    n1, out = args.n_docs_1x, args.out
     spark = get_spark("state-soak")
     spark.sparkContext.setLogLevel("ERROR")
     # throwaway warm-up run so JVM/Arrow/state-store init lands outside
@@ -423,14 +426,6 @@ def main() -> dict:
         "recovery replays snapshot + changelog tail, never ingest history"
     )
     print(json.dumps(results))
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        for m in [re.search(r"BENCH_r(\d+)", p)]
-    ]
-    n = (max(rounds) if rounds else 0) + 1
-    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(here, f"STATE_SOAK_r{n:02d}.json")
     with open(out, "w") as f:
         json.dump(results, f, indent=1)
     return results
