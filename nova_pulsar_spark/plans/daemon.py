@@ -14,9 +14,9 @@ Wall-clock decoupling: both take `now` so tests inject a clock
 writes) use the atomic tmp+rename publish — idempotent redo-safe, the
 batch rendition of the streaming `foreachBatch` sink contract.
 
-In production the same functions run on the reference cadences via
-Structured Streaming triggers (topics.DAEMON_TRIGGER/WATCHER_TRIGGER)
-or an external scheduler; `--once` ≡ calling them directly.
+Each call is one cycle; the caller sets the cadence (the reference
+polls every 300 s for the daemon and 30 s for the watcher), and the
+reference's `--once` is a single call.
 """
 
 from __future__ import annotations
@@ -293,66 +293,6 @@ def dispatch_once(
     finally:
         _log(root, decision)
     return decision
-
-
-def dispatch_stream(
-    spark: SparkSession,
-    root: str,
-    checkpoint_dir: str,
-    now: datetime | None = None,
-    scorer=None,
-) -> list[tuple[str, str]]:
-    """J7 stream-static guard join (`scripts/starry-daemon.sh:175-195`)
-    in true streaming form: the queued-plan stream is LEFT-ANTI joined
-    against the static active-plan set (projects with an active plan
-    are guarded out — the daemon's "a plan is currently active,
-    waiting" branch), then each micro-batch runs the Orbiter top-1
-    selection and publishes the dispatch decision atomically.
-
-    Returns the (project, plan_id) decisions for assertion; uses
-    ``Trigger.AvailableNow`` (the daemon's ``--once``) so tests drive a
-    complete cycle synchronously.
-    """
-    now = now or _utcnow()
-    stream = (
-        spark.readStream.schema(PLAN_SCHEMA)
-        .option("pathGlobFilter", "*.json")
-        .json(os.path.join(root, "*", "queued", "background"))
-    )
-    active = _read_plans(spark, root, "active")
-    if active is not None:
-        # the stream-static guard join: static side re-planned per batch
-        guarded = stream.join(active.select("project").distinct(), "project", "left_anti")
-    else:
-        guarded = stream
-
-    dispatched: list[tuple[str, str]] = []
-
-    def handle(batch_df, batch_id: int) -> None:
-        queued = batch_df.withColumn("status", F.lit("queued"))
-        best = S.select_plan(*_orbiter_inputs(queued), scorer=scorer).collect()
-        if best:
-            chosen = best[0]
-            atomic_write_json(
-                root,
-                f"dispatch-{batch_id}.json",
-                {
-                    "action": "dispatch",
-                    "project": chosen.project,
-                    "plan_id": chosen.id,
-                    "at": now.isoformat(),
-                },
-            )
-            dispatched.append((chosen.project, chosen.id))
-
-    q = (
-        guarded.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return dispatched
 
 
 def monitor_once(

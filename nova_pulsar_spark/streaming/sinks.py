@@ -1,17 +1,29 @@
-"""Exactly-once-ish sinks (Q9, SURVEY.md §2.9).
+"""Exactly-once foreachBatch sinks (Q9, SURVEY.md §2.9): one commit protocol.
 
-The reference gets atomic publish from single-node tmp+rename
-(`hooks/status-tracker.sh:156-188`) and heals missed writes with
-pre-created markers (`commands/pulsar.md:203-208`). The Spark
-rendition: `foreachBatch` sinks that are **idempotent per
-(key, batch_id)** — checkpoint replay after a failure re-runs a batch
-with the same batch_id, and the sink recognizes already-applied work.
+The reference gets atomic publish from tmp+rename
+(`hooks/status-tracker.sh:156-188`). Structured Streaming asks a sink to
+be idempotent per epoch and to remember the last epoch it committed.
+Every sink here does both the same way (:class:`_Committed`):
 
-`JsonDirSink` materializes one JSON file per key (the reference's
-one-file-per-record layout) with atomic rename; a `.batch-<id>` seal
-file makes replays no-ops. At scale the same contract is what makes
-speculative/retried tasks safe: last-writer-wins on identical
-content.
+1. Read the commit record, `_LATEST` in the sink's root:
+   ``{batch_id, lineage, …sink fields}``.
+2. A ``batch_id`` at or below the recorded one is a replay, unless both
+   sides name a checkpoint lineage and they differ. A replay is drained
+   through a noop write: a stateful upstream commits its state stores
+   during that pass, and Spark fails the batch if foreachBatch skips
+   partitions.
+3. Otherwise apply the batch's effect, then swap `_LATEST` atomically
+   (`atomic_write_json`). A crash before the swap replays the batch,
+   so every effect is written to be safe to redo from the recorded
+   state: per-key files overwrite, the append log truncates back to its
+   committed length, snapshots go to a version dir nobody reads yet.
+
+Batch ids are monotonic only per CHECKPOINT LINEAGE: when the query's
+checkpoint dir is recreated while the sink root persists, ids restart at
+0, and a guard on the recorded id alone would skip every new batch
+until the ids passed the old ones. The record therefore carries the
+streaming query id (see :func:`_lineage_id`); a different id is a new
+lineage and applies.
 """
 
 from __future__ import annotations
@@ -19,221 +31,112 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from nova_pulsar_spark.streaming.topics import atomic_write_json
 
 
-class JsonDirSink:
-    """foreachBatch target: one JSON file per key, idempotent replays."""
+def _lineage_id(batch_df: DataFrame) -> str | None:
+    """The streaming query id this batch belongs to — persisted in
+    the checkpoint, so it is stable across restarts of the same
+    lineage and FRESH when the checkpoint dir is recreated.
+    StreamExecution pins it as the ``sql.streaming.queryId`` local
+    property on the micro-batch thread, which identifies THIS query
+    even with several streams active; falls back to the single
+    active stream, else None (outside a foreachBatch context)."""
+    try:
+        qid = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if qid:
+            return str(qid)
+        active = SparkSession.getActiveSession()
+        streams = active.streams.active if active is not None else []
+        return str(streams[0].id) if len(streams) == 1 else None
+    except Exception:
+        return None
+
+
+class _Committed:
+    """The commit protocol (module docstring). A sink supplies
+    ``_apply(batch_df, cur) -> dict``: write the batch's effect given
+    the current record ``cur`` (None before the first commit) and
+    return the sink fields to record with it."""
+
+    def __init__(self, root: str):
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def current(self) -> dict | None:
+        try:
+            with open(os.path.join(self.root, "_LATEST")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        cur = self.current()
+        lineage = _lineage_id(batch_df)
+        if cur is not None and batch_id <= cur["batch_id"]:
+            recorded = cur.get("lineage")
+            if lineage is None or recorded is None or recorded == lineage:
+                batch_df.write.format("noop").mode("overwrite").save()
+                return
+        fields = self._apply(batch_df, cur)
+        atomic_write_json(self.root, "_LATEST", {"batch_id": batch_id, "lineage": lineage, **fields})
+
+
+class JsonDirSink(_Committed):
+    """One JSON file per key (the reference's one-file-per-record
+    layout), each published by atomic rename. A replay after a crash
+    rewrites the same files with the same content."""
 
     def __init__(self, directory: str, key_cols: list[str]):
-        self.directory = directory
+        super().__init__(directory)
         self.key_cols = key_cols
-        os.makedirs(directory, exist_ok=True)
 
-    def _seal_path(self, batch_id: int) -> str:
-        return os.path.join(self.directory, f".batch-{batch_id}")
-
-    def already_applied(self, batch_id: int) -> bool:
-        return os.path.exists(self._seal_path(batch_id))
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.already_applied(batch_id):
-            # Replay: effects are on disk. Drain the batch (noop write)
-            # so a stateful upstream still commits its state stores —
-            # Spark fails the batch if foreachBatch skips partitions.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-        rows = batch_df.collect()  # sink-side: batches are small rollups
-        for r in rows:
+    def _apply(self, batch_df: DataFrame, cur: dict | None) -> dict:
+        for r in batch_df.collect():  # sink-side: batches are small rollups
             d = r.asDict(recursive=True)
-            name = "-".join(str(d[k]) for k in self.key_cols) + ".json"
-            atomic_write_json(self.directory, name, d)
-        # seal AFTER all files are in place: a crash mid-batch replays
-        # the whole batch; per-file atomic rename makes that safe.
-        # (atomic_write_json is already tmp+rename — no second publish step.)
-        atomic_write_json(self.directory, os.path.basename(self._seal_path(batch_id)), {"batch_id": batch_id})
+            atomic_write_json(self.root, "-".join(str(d[k]) for k in self.key_cols) + ".json", d)
+        return {}
 
 
-class ParquetMergeSink:
-    """foreachBatch MERGE/upsert: maintains a keyed parquet snapshot —
-    the incremental-view-maintenance pattern (a streaming aggregation in
-    update mode feeds per-key deltas; the sink merges them into the
-    materialized table).
+class AppendLogSink(_Committed):
+    """S9 append-log sink: one JSON line per row, one append per batch.
 
-    MERGE = anti-join out the updated keys, union in the new rows, write
-    a NEW snapshot version, then atomically swap a `_LATEST` pointer
-    (tmp+rename — the reference's publish idiom). Readers following the
-    pointer never see a partial table; a crash before the swap leaves
-    the previous version live. Replays are no-ops via the recorded
-    batch_id (batch ids are monotonic per checkpoint).
-
-    On a lakehouse this whole class is `MERGE INTO` on Delta/Iceberg;
-    the versioned-dir + pointer layout is the same copy-on-write MVCC
-    those formats implement, expressed over plain parquet. The merge
-    itself is distributed (DataFrame anti-join + union — no driver-side
-    row data); the batch side is small per trigger, so Spark broadcasts
-    it against the snapshot scan.
-
-    Batch ids are monotonic only per CHECKPOINT LINEAGE: if the query's
-    checkpoint dir is recreated while the sink root persists, ids
-    restart at 0 and a bare ``batch_id <= current`` guard would
-    silently skip every new merge forever. The `_LATEST` pointer
-    therefore records the streaming query id (persisted in the
-    checkpoint metadata, read via the active session at merge time); a
-    different id means a new lineage, and the replay guard is bypassed instead of serving a
-    stale snapshot as current.
-    """
-
-    def __init__(self, root: str, key_cols: list[str]):
-        self.root = root
-        self.key_cols = key_cols
-        os.makedirs(root, exist_ok=True)
-
-    @staticmethod
-    def _lineage_id(batch_df: DataFrame) -> str | None:
-        """The streaming query id this batch belongs to — persisted in
-        the checkpoint, so it is stable across restarts of the same
-        lineage and FRESH when the checkpoint dir is recreated.
-        StreamExecution pins it as the ``sql.streaming.queryId`` local
-        property on the micro-batch thread, which identifies THIS query
-        even with several streams active; falls back to the single
-        active stream, else None (outside a foreachBatch context)."""
-        try:
-            qid = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
-            if qid:
-                return str(qid)
-            from pyspark.sql import SparkSession
-
-            active = SparkSession.getActiveSession()
-            streams = active.streams.active if active is not None else []
-            return str(streams[0].id) if len(streams) == 1 else None
-        except Exception:
-            return None
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, "_LATEST")
-
-    def current(self) -> dict | None:
-        try:
-            with open(self._pointer_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def snapshot_path(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version:06d}")
-
-    def read_snapshot(self, spark) -> DataFrame | None:
-        cur = self.current()
-        if cur is None:
-            return None
-        return spark.read.parquet(self.snapshot_path(cur["version"]))
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        cur = self.current()
-        lineage = self._lineage_id(batch_df)
-        if cur is not None and batch_id <= cur["batch_id"]:
-            known = lineage is not None and cur.get("lineage") is not None
-            if not (known and cur["lineage"] != lineage):
-                # Checkpoint replay — this batch is already merged. Still
-                # drain the batch through a noop write: a stateful
-                # upstream commits its state stores during this pass, and
-                # Spark validates that foreachBatch processed every
-                # partition (early return would fail the commit check).
-                batch_df.write.format("noop").mode("overwrite").save()
-                return
-            # else: NEW lineage (checkpoint recreated, ids restarted at
-            # 0) — fall through and merge instead of serving stale data
-        updates = batch_df  # update-mode aggregation: one row per key
-        if cur is None:
-            merged, version = updates, 0
-        else:
-            spark = batch_df.sparkSession
-            snap = spark.read.parquet(self.snapshot_path(cur["version"]))
-            merged = snap.join(
-                updates.select(*self.key_cols).distinct(), self.key_cols, "left_anti"
-            ).unionByName(updates)
-            version = cur["version"] + 1
-        merged.write.mode("overwrite").parquet(self.snapshot_path(version))
-        # publish AFTER the snapshot is fully written (atomic pointer swap)
-        atomic_write_json(
-            self.root,
-            os.path.basename(self._pointer_path()),
-            {"version": version, "batch_id": batch_id, "lineage": lineage},
-        )
-
-
-class AppendLogSink:
-    """S9 append-log sink: `{ts} - {msg}` lines, one write per batch.
-
-    Idempotent per batch_id like JsonDirSink: a `.batch-<id>` seal in a
-    sidecar dir makes checkpoint replays no-ops — without it a crash
-    between append and checkpoint-commit would duplicate the batch's
-    lines on recovery.
-    """
+    The commit record (in the ``<path>.commit`` sidecar dir) holds the
+    log's committed length ``end``. Each batch first truncates the log
+    to ``end``, so lines a crashed batch appended before its commit are
+    dropped, not duplicated, when the batch is replayed. The sink owns
+    its log: with no record yet, ``end`` is 0."""
 
     def __init__(self, path: str):
+        super().__init__(path + ".commit")  # also creates the log's dir
         self.path = path
-        self.seal_dir = path + ".batches"
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        os.makedirs(self.seal_dir, exist_ok=True)
 
-    def _seal_path(self, batch_id: int) -> str:
-        return os.path.join(self.seal_dir, f".batch-{batch_id}")
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._seal_path(batch_id)):
-            # Replay: drain the batch (state-store commit validation —
-            # see JsonDirSink) without re-appending.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-        lines = [json.dumps(r.asDict(recursive=True), default=str) for r in batch_df.collect()]
-        if lines:
-            with open(self.path, "a") as f:
-                for line in lines:
-                    f.write(line + "\n")
-        atomic_write_json(self.seal_dir, f".batch-{batch_id}", {"batch_id": batch_id})
+    def _apply(self, batch_df: DataFrame, cur: dict | None) -> dict:
+        lines = [json.dumps(r.asDict(recursive=True), default=str) + "\n" for r in batch_df.collect()]
+        with open(self.path, "ab") as f:
+            f.truncate(cur["end"] if cur else 0)
+            f.write("".join(lines).encode())
+            f.flush()
+            return {"end": os.fstat(f.fileno()).st_size}
 
 
-class DeltaAggSink:
-    """foreachBatch delta-accumulation: maintains running per-key SUMS
-    (counts, totals) by MERGING each append-mode batch's partial
-    aggregate into a versioned snapshot — incremental materialized-view
-    maintenance for distributive aggregates.
+class _Snapshots(_Committed):
+    """A keyed table kept as versioned parquet dirs; `_LATEST` records
+    the live ``version``. A sink supplies ``_merge(snapshot or None,
+    batch_df)``, written to the next version and published by the
+    pointer swap: readers never see a partial table, and a crash before
+    the swap leaves the previous version live. The merge is distributed.
 
-    Contrast with :class:`ParquetMergeSink` (last-writer-wins upsert
-    fed by update-mode aggregations, which re-emit the full per-key
-    value): here the STREAM stays append-mode raw rows, each batch is
-    reduced to per-key deltas distributively (map-side combine inside
-    the batch), and merge = group-sum of snapshot ∪ delta. That keeps
-    the streaming state store empty — the accumulation lives in the
-    sink table — which is the right trade at 100 TB when the key
-    cardinality is too large for executor state but the per-batch
-    delta is small.
+    On a lakehouse this is `MERGE INTO` on Delta/Iceberg; the
+    versioned-dir + pointer layout is the same copy-on-write MVCC those
+    formats implement, expressed over plain parquet."""
 
-    Same durability idiom as ParquetMergeSink: versioned snapshot dirs,
-    atomic `_LATEST` pointer swap after a full write, replays no-op'd
-    per (batch_id, checkpoint lineage) with the batch drained through a
-    noop write so upstream commit checks pass.
-    """
-
-    def __init__(self, root: str, key_cols: list[str], sum_cols: list[str]):
-        self.root = root
+    def __init__(self, root: str, key_cols: list[str]):
+        super().__init__(root)
         self.key_cols = key_cols
-        self.sum_cols = sum_cols
-        os.makedirs(root, exist_ok=True)
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, "_LATEST")
-
-    def current(self) -> dict | None:
-        try:
-            with open(self._pointer_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
 
     def snapshot_path(self, version: int) -> str:
         return os.path.join(self.root, f"v{version:06d}")
@@ -244,30 +147,49 @@ class DeltaAggSink:
             return None
         return spark.read.parquet(self.snapshot_path(cur["version"]))
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        cur = self.current()
-        lineage = ParquetMergeSink._lineage_id(batch_df)
-        if cur is not None and batch_id <= cur["batch_id"]:
-            known = lineage is not None and cur.get("lineage") is not None
-            if not (known and cur["lineage"] != lineage):
-                batch_df.write.format("noop").mode("overwrite").save()
-                return
-        delta = batch_df.groupBy(*self.key_cols).agg(
-            *[F.sum(c).cast("bigint").alias(c) for c in self.sum_cols]
-        )
+    def _apply(self, batch_df: DataFrame, cur: dict | None) -> dict:
         if cur is None:
-            merged, version = delta, 0
+            merged, version = self._merge(None, batch_df), 0
         else:
             snap = batch_df.sparkSession.read.parquet(self.snapshot_path(cur["version"]))
-            merged = snap.unionByName(delta).groupBy(*self.key_cols).agg(
-                *[F.sum(c).cast("bigint").alias(c) for c in self.sum_cols]
-            )
-            version = cur["version"] + 1
+            merged, version = self._merge(snap, batch_df), cur["version"] + 1
         merged.write.mode("overwrite").parquet(self.snapshot_path(version))
-        atomic_write_json(
-            self.root,
-            os.path.basename(self._pointer_path()),
-            {"version": version, "batch_id": batch_id, "lineage": lineage},
-        )
+        return {"version": version}
+
+
+class ParquetMergeSink(_Snapshots):
+    """foreachBatch MERGE/upsert — the incremental-view-maintenance
+    pattern: an update-mode aggregation feeds one row per changed key,
+    and the merge anti-joins those keys out of the snapshot and unions
+    the new rows in. The batch side is small per trigger, so Spark
+    broadcasts it against the snapshot scan."""
+
+    def _merge(self, snap: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        if snap is None:
+            return batch_df
+        keys = batch_df.select(*self.key_cols).distinct()
+        return snap.join(keys, self.key_cols, "left_anti").unionByName(batch_df)
+
+
+class DeltaAggSink(_Snapshots):
+    """foreachBatch delta-accumulation: running per-key SUMS of
+    ``sum_cols`` — incremental materialized-view maintenance for
+    distributive aggregates. Unlike :class:`ParquetMergeSink` (fed by
+    update-mode aggregations that re-emit the full per-key value), the
+    STREAM stays append-mode raw rows: each batch is reduced to per-key
+    deltas (map-side combine), and merge = group-sum of snapshot ∪ delta.
+    That keeps the streaming state store empty — the accumulation lives
+    in the sink table — the right trade at 100 TB when the key
+    cardinality is too large for executor state but the per-batch delta
+    is small."""
+
+    def __init__(self, root: str, key_cols: list[str], sum_cols: list[str]):
+        super().__init__(root, key_cols)
+        self.sum_cols = sum_cols
+
+    def _merge(self, snap: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        def total(df: DataFrame) -> DataFrame:
+            return df.groupBy(*self.key_cols).agg(*[F.sum(c).cast("bigint").alias(c) for c in self.sum_cols])
+
+        delta = total(batch_df)
+        return delta if snap is None else total(snap.unionByName(delta))

@@ -331,11 +331,13 @@ def stream_interval_join(
     "join; the live streaming form is pinned in tests/test_streaming.py",
 )
 def stream_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch rendition over the events table: equi-join on the user key
-    with the time bound as a residual range predicate — the exact
-    results the watermarked streaming form converges to (asserted
-    live in the test suite). At scale the equi-key carries the
-    shuffle; the residual range never becomes a cross product."""
+    """Batch rendition over the events table: the streaming join itself
+    on two static frames, where Spark drops the watermarks, leaving an
+    equi-join on the user key with the time bound as a residual range
+    predicate — the exact results the watermarked streaming form
+    converges to (asserted live in the test suite). At scale the
+    equi-key carries the shuffle; the residual range never becomes a
+    cross product."""
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("imp_id"),
@@ -347,20 +349,4 @@ def stream_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("click_user"),
         F.col("ts").alias("click_ts"),
     )
-    return (
-        v.join(
-            c,
-            F.expr(
-                f"view_user = click_user AND click_ts >= view_ts "
-                f"AND click_ts <= view_ts + INTERVAL {ATTRIB_WINDOW_MIN} MINUTES"
-            ),
-        )
-        .select(
-            "imp_id",
-            "click_id",
-            F.col("view_user").alias("user_id"),
-            ((F.unix_micros(F.col("click_ts")) - F.unix_micros(F.col("view_ts"))) / F.lit(1_000_000))
-            .cast("bigint")
-            .alias("delay_s"),
-        )
-    )
+    return stream_interval_join(v, c)

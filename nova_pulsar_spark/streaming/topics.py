@@ -27,11 +27,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Reference trigger cadences (BASELINE.md).
-DAEMON_TRIGGER = "300 seconds"
-WATCHER_TRIGGER = "30 seconds"
-ORCHESTRATOR_TRIGGER = "5 seconds"
-
 STATUS_SCHEMA = T.StructType(
     [
         T.StructField("task_id", T.StringType()),

@@ -9,8 +9,10 @@ Two antipatterns are banned outright:
   in the engine is against a broadcast singleton/tiny frame, which
   plans as ``BroadcastNestedLoopJoin`` instead.
 
-Also pinned: every registered query carries a DuckDB oracle twin —
-the zero-rows-only invariant the correctness gate relies on.
+Also pinned: which queries plan a window with no partition spec (all
+rows in one task), against a committed allow-list; and every
+registered query carries a DuckDB oracle twin — the zero-rows-only
+invariant the correctness gate relies on.
 """
 
 from __future__ import annotations
@@ -45,15 +47,63 @@ def test_no_rdd_access_in_engine_source():
     assert not hits, f".rdd access in engine source: {hits}"
 
 
+# Keys whose executed plan holds a Window with no partition spec: Spark
+# moves all of its input to one task (an `Exchange SinglePartition`
+# below it). docs/SCALE.md ("Windows that stay") keeps such windows only
+# over frames bounded by construction, never the corpus; a new entry
+# needs that argument, and one that leaves the plans leaves this list.
+# A window behind a local checkpoint (`llm_mix_budget`'s per-source
+# window) shows in the executed plan only as an RDD scan and is not
+# checked here.
+UNPARTITIONED_WINDOWS = {
+    "agg_histogram_equidepth",
+    "llm_corpus_layout",
+    "llm_dsir_weights",
+    "llm_mix_apply",
+    "llm_shard_assign",
+    "llm_shard_balance",
+    "llm_simsearch_ivf_stats",
+    "llm_simsearch_prefiltered",
+    "llm_simsearch_rrf",
+    "llm_token_coverage",
+    "topk_skyline",
+    "ts_cumulative_users",
+    "ts_rolling_active",
+}
+
+
+def _has_unpartitioned_window(plan) -> bool:
+    """Walk a JVM physical plan, its subqueries, cached plans and AQE
+    wrappers, looking for a `WindowExec` with an empty partition spec."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "WindowExec" and node.partitionSpec().isEmpty():
+            return True
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 @pytest.mark.slow
 def test_no_query_plans_a_scale_antipattern(spark):
-    flagged = {}
+    flagged, unpartitioned = {}, set()
     for name, rq in sorted(all_queries().items()):
-        plan = rq.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        jplan = rq.fn(spark, SF)._jdf.queryExecution().executedPlan()
+        plan = jplan.toString()
         hits = [p for p in BANNED if p in plan]
         if hits:
             flagged[name] = hits
+        if "Window" in plan and _has_unpartitioned_window(jplan):
+            unpartitioned.add(name)
     assert not flagged, f"scale antipatterns in plans: {flagged}"
+    assert unpartitioned == UNPARTITIONED_WINDOWS, (
+        f"new unpartitioned windows: {sorted(unpartitioned - UNPARTITIONED_WINDOWS)}; "
+        f"gone from the plans: {sorted(UNPARTITIONED_WINDOWS - unpartitioned)}"
+    )
 
 
 def test_ts_contract_no_inline_null_filters():

@@ -202,42 +202,6 @@ def test_queue_namespace_lifecycle_moves(tmp_path):
     assert json.load(open(final))["id"] == "plan-x"
 
 
-def test_stream_static_guard_join_dispatch(spark, tmp_path):
-    """J7 (starry-daemon.sh:175-195): queued-plan STREAM anti-joined
-    against static active state — the project with an active plan is
-    guarded out; the dispatch decision flows through a real
-    writeStream/foreachBatch."""
-    import json
-    import os
-
-    from nova_pulsar_spark.plans.daemon import dispatch_stream
-    from nova_pulsar_spark.streaming.topics import QueueNamespace, atomic_write_json
-    from tests.test_daemon import _plan
-
-    root = str(tmp_path / "queues")
-    alpha = QueueNamespace(root=root, project="alpha")
-    beta = QueueNamespace(root=root, project="beta")
-    alpha.setup()
-    beta.setup()
-    # alpha already has an ACTIVE plan → its queued bug (which would
-    # otherwise win on priority) must be suppressed by the guard join
-    atomic_write_json(
-        alpha.dir_for("active"),
-        "plan-alpha-active.json",
-        _plan("plan-alpha-active", "alpha", "feature", "2026-02-25T09:00:00", [["core.py"]]),
-    )
-    alpha.enqueue_plan(_plan("plan-alpha-bug", "alpha", "bug", "2026-02-26T09:00:00", [["a.py"]]))
-    beta.enqueue_plan(_plan("plan-beta-chore", "beta", "chore", "2026-02-27T09:00:00", [["b.py"]]))
-
-    dispatched = dispatch_stream(spark, root, str(tmp_path / "ckpt"))
-
-    assert dispatched == [("beta", "plan-beta-chore")]
-    decision_files = [f for f in os.listdir(root) if f.startswith("dispatch-")]
-    assert len(decision_files) == 1
-    rec = json.load(open(os.path.join(root, decision_files[0])))
-    assert rec["plan_id"] == "plan-beta-chore" and rec["action"] == "dispatch"
-
-
 def test_lifecycle_stream_on_rocksdb_state_store(spark, tmp_path):
     """The stateful lifecycle machine runs unchanged on the RocksDB
     provider (the off-heap store large-state deployments need), and the
