@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nova_pulsar_spark.fixpoint import MAX_CC_ITERS, min_label_components
 from nova_pulsar_spark.registry import register
 from nova_pulsar_spark.sources.tables import load_table
 
@@ -679,13 +680,10 @@ _KEEP_BEST_SQL = (
     "cluster stage that completes the generate→verify→cluster dedup DAG)",
 )
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by iterative min-label propagation (the
-    Pregel pattern, same loop discipline as `join_dep_closure`:
-    localCheckpoint per step, one scalar probe). Components only span
-    verified duplicate pairs, so the graph is the (small) dup subgraph,
-    not the corpus; iterations = component diameter — near-dup clusters
-    are shallow in practice. The label sum is monotonically decreasing,
-    so it doubles as the fixpoint probe without a separate join.
+    """Connected components of the verified dup pairs, by
+    `fixpoint.min_label_components` (min-label propagation with pointer
+    jumping). Components only span verified duplicate pairs, so the
+    graph is the (small) dup subgraph, not the corpus.
 
     Like ``ivf_centroids``, the converged labels are an index-build
     artifact, deterministic per corpus: the memoized value is the
@@ -697,44 +695,13 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def make() -> DataFrame:
         _, cand, ws = dedup_candidates(spark, sf_dir)
-        dup = (
-            _pair_jaccard(cand, ws)
-            .filter(F.col("jaccard") >= DUP_THRESHOLD)
-            .select("doc_a", "doc_b")
-        )
-        sym = (
-            dup.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-            .union(dup.select(F.col("doc_a").alias("src"), F.col("doc_a").alias("dst")))
-            .union(dup.select(F.col("doc_b").alias("src"), F.col("doc_b").alias("dst")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # Lazy checkpoints: the scalar probe right after materializes the
-        # checkpoint in the SAME job, so each iteration costs one action
-        # (not checkpoint-job + probe-job) — halves the fixpoint job count.
-        labels = sym.groupBy("src").agg(F.min("dst").alias("label")).localCheckpoint(eager=False)
-        prev_sum = labels.agg(F.sum("label")).first()[0]
-        while True:
-            prop = (
-                labels.alias("l")
-                .join(sym.alias("s"), F.col("s.src") == F.col("l.src"))
-                .select(F.col("s.dst").alias("src"), F.col("l.label").alias("label"))
-            )
-            labels = (
-                labels.unionByName(prop)
-                .groupBy("src")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = labels.agg(F.sum("label")).first()[0]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
+        dup = _pair_jaccard(cand, ws).filter(F.col("jaccard") >= DUP_THRESHOLD)
+        edges = dup.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        labels = min_label_components(edges, MAX_CC_ITERS)
         return labels.select(
-            F.col("src").alias("doc_id"),
-            F.col("label").alias("component_id"),
-            (F.col("label") == F.col("src")).alias("is_keeper"),
+            F.col("v").alias("doc_id"),
+            F.col("lbl").alias("component_id"),
+            (F.col("lbl") == F.col("v")).alias("is_keeper"),
         )
 
     return memo(spark, sf_dir, "dedup_clusters", make)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from nova_pulsar_spark.fixpoint import MAX_CC_ITERS, min_label_components
 from nova_pulsar_spark.registry import register
 from nova_pulsar_spark.sources.tables import load_table
 
@@ -240,7 +241,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and carry no signal); it is also what keeps the oracle twin's
 # transitive closure bounded.
 MIN_COPURCHASE_W = 2
-MAX_CC_ITERS = 64  # safety bound; compression converges in O(log n)
 
 
 @register(
@@ -283,18 +283,11 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components — the other half of the graph-census pair
     (triangles measure local density; components measure global
     fragmentation — dup-cluster extraction, community pre-pass, data
-    lineage islands). The Spark side is iterative min-label
-    propagation with PATH COMPRESSION: each round every vertex takes
-    the min label over itself and its neighbors (one edge-bounded
-    join + map-side-combinable groupBy), then labels jump one level
-    (l(v) <- l(l(v)), a self-join) — the compression step is what
-    turns worst-case-diameter rounds into O(log n), the
-    Kiveris-et-al. two-phase discipline in DataFrame algebra. One
-    bounded action per round probes the fixpoint (changed == 0), with
-    lazy localCheckpoint truncating lineage — the sched_rounds
-    pattern. Every shuffle is edge- or vertex-bounded; no closure is
-    ever materialized (the oracle twin derives components the
-    opposite way — a descending-label transitive closure, tractable
+    lineage islands). The labels come from
+    `fixpoint.min_label_components` (min-label propagation with pointer
+    jumping, O(log n) rounds). Every shuffle is edge- or vertex-bounded;
+    no closure is ever materialized (the oracle twin derives components
+    the opposite way — a descending-label transitive closure, tractable
     at oracle scale and independent of the Spark derivation). The
     histogram output (size, count) is partition- and
     iteration-order-independent: min-label fixpoints are unique."""
@@ -303,42 +296,7 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") >= MIN_COPURCHASE_W)
         .select("a", "b")
     )
-    sym = (
-        edges.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=False)  # reused every round
-    )
-    labels = sym.select("v").distinct().select("v", F.col("v").alias("lbl"))
-    labels = labels.localCheckpoint(eager=False)
-    prev_sum = None
-    for _ in range(MAX_CC_ITERS):
-        msgs = sym.join(
-            labels.select(F.col("v").alias("u"), F.col("lbl")), "u"
-        ).select("v", "lbl")
-        cand = (
-            labels.select("v", "lbl")
-            .unionAll(msgs)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        # path compression: l(v) <- l(l(v)) where the pointer resolves
-        jump = cand.select(F.col("v").alias("lbl"), F.col("lbl").alias("lbl2"))
-        new_labels = (
-            cand.join(jump, "lbl", "left")
-            .select("v", F.coalesce("lbl2", "lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-        # Fixpoint probe: labels only ever DECREASE elementwise, so the
-        # label sum is strictly decreasing until convergence — a cheap
-        # aggregate on the new frame instead of an old-vs-new join
-        # (DECIMAL accumulator: a BIGINT sum of n ids overflows at scale).
-        cur_sum = new_labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        labels = new_labels
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    labels = min_label_components(edges, MAX_CC_ITERS)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("sz"))
     return (
         sizes.groupBy("sz")

@@ -1465,7 +1465,9 @@ def llm_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1),
         ).otherwise(F.lit(0)),
     )
-    sat = sat.localCheckpoint(eager=False)  # level aggregate + final select
+    # Runs the scan, token-count and window stages at build time (AQE), so
+    # the level aggregate and the final select read them once, not twice.
+    sat = sat.localCheckpoint(eager=False)
     lvl = sat.agg(
         F.max("budget").alias("budget"),
         F.max("n_src").alias("n_src"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from nova_pulsar_spark.fixpoint import fixpoint
 from nova_pulsar_spark.plans import scheduler as S
 from nova_pulsar_spark.plans.fixtures import (
     BOARD,
@@ -642,6 +643,8 @@ def join_dep_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _join_dep_overlap_impl(spark, sf_dir)
 
 
+MAX_DEP_DEPTH = 64  # join_dep_closure's round cap; the fixture DAG has 14 plans
+
 # Reachability is an iterative semi-naive fixpoint (the Pregel pattern)
 # checkpointed per step; the DuckDB twin IS a recursive CTE — proving the
 # loop computes exactly the SQL-standard closure. Spark 4.1 runs WITH
@@ -670,31 +673,25 @@ _CLOSURE_SQL = (
 )
 def join_dep_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All (ancestor, descendant) reachability pairs over the dep DAG.
-    Semi-naive iteration: each step extends frontier paths by one edge,
-    unions+distincts, and `localCheckpoint`s to truncate lineage (the
-    same rule as `phase_rounds`). Iterations = DAG depth, each a
-    distributed self-join — no driver-side row data, only a count probe.
+    Semi-naive iteration by `fixpoint.fixpoint`: each step extends every
+    path by one edge and distincts; the probe is the pair count.
+    Iterations = DAG depth, each a distributed self-join — no
+    driver-side row data.
     """
-    # Lazy checkpoints: the count probe right after materializes each
-    # checkpoint in the same job — one action per iteration.
     edges = S.dep_edges(PLANS.spark_df(spark), PHASES.spark_df(spark)).localCheckpoint(
         eager=False
     )
-    closure = edges.select(
-        F.col("dep_id").alias("ancestor"), F.col("plan_id").alias("descendant")
-    ).localCheckpoint(eager=False)
-    n = closure.count()
-    while True:
+
+    def step(closure: DataFrame) -> DataFrame:
         extended = (
             closure.alias("c")
             .join(edges.alias("e"), F.col("e.dep_id") == F.col("c.descendant"))
             .select(F.col("c.ancestor").alias("ancestor"), F.col("e.plan_id").alias("descendant"))
         )
-        closure = closure.unionByName(extended).distinct().localCheckpoint(eager=False)
-        new_n = closure.count()
-        if new_n == n:
-            return closure
-        n = new_n
+        return closure.unionByName(extended).distinct()
+
+    start = edges.select(F.col("dep_id").alias("ancestor"), F.col("plan_id").alias("descendant"))
+    return fixpoint(start, step, F.count(F.lit(1)), MAX_DEP_DEPTH, "join_dep_closure")
 
 
 def _join_dep_overlap_impl(spark: SparkSession, sf_dir: str) -> DataFrame:

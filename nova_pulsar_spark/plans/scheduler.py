@@ -28,6 +28,8 @@ import re
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from nova_pulsar_spark.fixpoint import fixpoint
+
 # Reference type→priority table (agents/orbiter.md:68-77).
 TYPE_PRIORITY = {"security": 1, "bug": 2, "feature": 3, "refactor": 4, "chore": 5, "docs": 5}
 
@@ -307,27 +309,17 @@ def phase_rounds(phases: DataFrame, max_iters: int = 16) -> DataFrame:
     round run fully parallel, rounds are barriers.
 
     Iterative frontier relaxation over the conflict DAG — the plan-level
-    analog of Spark's own stage scheduling. The loop is driver-side but
-    each step is a distributed join; depth ≤ max phase count bounds it.
+    analog of Spark's own stage scheduling — run by `fixpoint.fixpoint`:
+    each step is a distributed join, and the probe is the deepest round
+    so far. Depth ≤ max phase count bounds it; a chain deeper than
+    ``max_iters`` raises.
     """
     # The conflict edge set is loop-invariant: checkpoint it ONCE so the
     # explode + self-join behind phase_conflicts runs one time, not once
     # per depth level inside every iteration's join plan.
     conflicts = phase_conflicts(phases).localCheckpoint(eager=False)
-    # localCheckpoint truncates lineage each step — without it every
-    # iteration re-plans (and the fixpoint probe re-executes) the whole
-    # join chain so far, and the plan grows superlinearly with depth.
-    # Lazy checkpoints throughout the loop: the fixpoint probe right
-    # after each checkpoint materializes it in the same job (one action
-    # per iteration instead of checkpoint-job + probe-job).
-    rounds = (
-        phases.select("plan_id", "phase")
-        .withColumn("round", F.lit(1))
-        .localCheckpoint(eager=False)
-    )
-    prev_max = 1
-    converged = False
-    for _ in range(max_iters):
+
+    def step(rounds: DataFrame) -> DataFrame:
         bumped = (
             conflicts.alias("c")
             .join(
@@ -340,28 +332,10 @@ def phase_rounds(phases: DataFrame, max_iters: int = 16) -> DataFrame:
                 (F.col("r.round") + 1).alias("round"),
             )
         )
-        rounds = (
-            rounds.unionByName(bumped)
-            .groupBy("plan_id", "phase")
-            .agg(F.max("round").alias("round"))
-            .localCheckpoint(eager=False)
-        )
-        # Fixpoint when the frontier stopped deepening (ONE scalar probe
-        # per step; the previous depth is remembered driver-side).
-        new_max = rounds.agg(F.max("round")).first()[0]
-        if new_max == prev_max:
-            converged = True
-            break
-        prev_max = new_max
-    if not converged:
-        # The DuckDB twin (_ROUNDS_SQL, an unbounded recursive CTE) has
-        # no such cap — a chain deeper than max_iters must error loudly
-        # here rather than silently diverge between the two engines.
-        raise ValueError(
-            f"phase_rounds did not reach a fixpoint within max_iters={max_iters}; "
-            f"conflict chain is deeper — raise max_iters (depth so far: {prev_max})"
-        )
-    return rounds
+        return rounds.unionByName(bumped).groupBy("plan_id", "phase").agg(F.max("round").alias("round"))
+
+    start = phases.select("plan_id", "phase").withColumn("round", F.lit(1))
+    return fixpoint(start, step, F.max("round"), max_iters, "phase_rounds")
 
 
 def latest_status(status_events: DataFrame) -> DataFrame:

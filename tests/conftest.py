@@ -24,5 +24,18 @@ def sf_dir():
     return SF_SMOKE
 
 
+def _jobs_in(spark, group: str, fn):
+    """``fn()``'s value and the number of Spark jobs it submitted,
+    counted per job group with ``statusTracker``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running full-surface checks")

@@ -9,6 +9,7 @@ from datetime import datetime
 
 from nova_pulsar_spark.plans.daemon import dispatch_once, monitor_once
 from nova_pulsar_spark.streaming.topics import QueueNamespace, atomic_write_json
+from tests.conftest import _jobs_in
 
 NOW = datetime(2026, 3, 1, 12, 0, 0)
 
@@ -368,17 +369,6 @@ def test_scan_reads_three_state_dirs_in_one_listing(spark, tmp_path):
         ("plan-20260226-0900", "beta", "active"),
         ("plan-done", "beta", "completed"),
     }
-
-
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_cycle_stays_within_job_budget(spark, tmp_path):

@@ -165,6 +165,21 @@ def test_components_long_path_converges(spark, tmp_path):
     assert got == {(64, 1)}, got
 
 
+def test_components_raise_past_the_round_cap(spark, tmp_path, monkeypatch):
+    """The same 64-vertex path under a 2-round cap must raise, not return
+    unconverged labels (a size histogram of [(1, 57), (7, 1)])."""
+    import pytest
+
+    from nova_pulsar_spark.operators import graphs
+
+    baskets = [[i, i + 1] for i in range(63) for _ in range(2)]
+    d = str(tmp_path / "c3")
+    _write_lineitem(spark, d, baskets)
+    monkeypatch.setattr(graphs, "MAX_CC_ITERS", 2)
+    with pytest.raises(ValueError, match="fixpoint"):
+        graph_components(spark, d).collect()
+
+
 # --- graph_jaccard_edges -------------------------------------------------
 
 from nova_pulsar_spark.operators.graphs import EMB_TOP_EDGES, graph_jaccard_edges

@@ -18,7 +18,7 @@ from nova_pulsar_spark.operators import ranks as R
 from nova_pulsar_spark.operators import similarity as S
 from nova_pulsar_spark.operators.ann_index import index_root
 from nova_pulsar_spark.sources.tables import load_table
-from tests.test_daemon import _jobs_in
+from tests.conftest import _jobs_in
 
 
 def _write_docs(spark, path, seed, n=10):
